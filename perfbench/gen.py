@@ -341,46 +341,43 @@ def expected_sink_rows(doc_refs, manifest: dict, poly_rows: list[tuple]) -> int:
 
 
 # -- text corpus --------------------------------------------------------------
-HOT_WORDS = (
-    "batch part spark line column order small sort fast value scan hash slow "
-    "group agg filter query big key window row table stream merge data a "
-    "index join plan cache node shard tile cell ring page block file"
+# Shape measured on the sf0.1 `documents` table (5,000 docs, 270,704 words):
+# every word is one of these 30, each 3.3% of all words (uniform); doc
+# length is uniform on 10-99 words; 250 docs (5.0%) are a copy of another
+# doc with the marker word "dup" appended; 8 texts (0.16%) repeat exactly.
+SF01_VOCAB = (
+    "a agg batch big column customer data fast filter group hash join key line "
+    "merge order part query row scan slow small sort spark stream table the "
+    "value vector window"
 ).split()
-HOT_WEIGHT = 8.0  # per hot word; tail word r weighs 1/r^0.9, so ~96% of words are hot
+DUP_MARK = "dup"
+NEAR_RATE = 0.05
+EXACT_RATE = 0.0016
 
 
-def make_corpus(n_base: int, seed: int, near_rate: float = 0.08,
-                exact_rate: float = 0.02, edit_rate: float = 0.06):
-    """Docs of 30-70 words: a hot vocabulary shared by all docs plus a
-    Zipf tail of synthetic words. ``near_rate``·n_base planted near-dups
-    (a copy with ``edit_rate`` of its words replaced) and
-    ``exact_rate``·n_base planted exact copies are appended after the base
-    docs; sources of the two kinds are disjoint.
+def make_corpus(n_docs: int, seed: int):
+    """``n_docs`` docs with the sf0.1 shape above: uniform words from
+    ``SF01_VOCAB``, 10-99 words each, ``NEAR_RATE`` near-dups (a copy plus
+    " dup") and ``EXACT_RATE`` exact copies, sources of the two kinds
+    disjoint. Ids are shuffled so copies sit anywhere in the corpus.
 
     Returns (ids, texts, near_pairs, exact_pairs) with pairs as (a, b), a<b."""
     rng = rng_for(seed, "corpus")
-    tail = [f"w{i:04x}" for i in range(4000)]
-    vocab = np.array(HOT_WORDS + tail)
-    w = np.concatenate([np.full(len(HOT_WORDS), HOT_WEIGHT), 1.0 / np.arange(1, 4001) ** 0.9])
-    p = w / w.sum()
-    words = [list(vocab[rng.choice(len(vocab), int(rng.integers(30, 71)), p=p)])
+    n_near = round(n_docs * NEAR_RATE)
+    n_exact = max(1, round(n_docs * EXACT_RATE))
+    n_base = n_docs - n_near - n_exact
+    vocab = np.array(SF01_VOCAB)
+    texts = [" ".join(vocab[rng.integers(0, len(vocab), int(rng.integers(10, 100)))])
              for _ in range(n_base)]
-    n_near, n_exact = int(n_base * near_rate), int(n_base * exact_rate)
     src = rng.permutation(n_base)[: n_near + n_exact]
-    near_pairs, exact_pairs = [], []
     for k, s in enumerate(src):
-        new_id = len(words)
-        if k < n_near:
-            copy = list(words[s])
-            for pos in rng.choice(len(copy), max(1, int(len(copy) * edit_rate)), replace=False):
-                copy[pos] = tail[int(rng.integers(len(tail)))]
-            near_pairs.append((int(s), new_id))
-        else:
-            copy = list(words[s])
-            exact_pairs.append((int(s), new_id))
-        words.append(copy)
-    texts = [" ".join(ws) for ws in words]
-    return np.arange(len(texts), dtype=np.int64), texts, near_pairs, exact_pairs
+        texts.append(texts[s] + " " + DUP_MARK if k < n_near else texts[s])
+    pos = rng.permutation(n_docs)  # doc i gets id pos[i]
+    pairs = [tuple(sorted((int(pos[s]), int(pos[n_base + k])))) for k, s in enumerate(src)]
+    out = [""] * n_docs
+    for i, t in enumerate(texts):
+        out[pos[i]] = t
+    return np.arange(n_docs, dtype=np.int64), out, pairs[:n_near], pairs[n_near:]
 
 
 def char_jaccard(a: str, b: str, n: int = 5) -> float:
@@ -402,17 +399,15 @@ def word_jaccard(a: str, b: str, n: int = 3) -> float:
 
 
 # -- embeddings ---------------------------------------------------------------
-def make_embeddings(n: int, dim: int, n_queries: int, seed: int,
-                    n_clusters: int = 48, noise: float = 0.35):
-    """Clustered float32 vectors (unit centres + gaussian noise) and a query
-    batch of perturbed corpus vectors. Returns (vecs, labels, queries)."""
+def make_embeddings(n: int, dim: int, n_queries: int, seed: int, n_labels: int = 10):
+    """Vectors with the sf0.1 `embeddings` shape (2,000 x 64, measured):
+    unit-norm, directions iid (nearest-neighbour cosine about 0.41, no
+    cluster structure) and ``n_labels`` uniform labels. Queries are corpus
+    vectors, as in q17. Returns (vecs, labels, queries)."""
     rng = rng_for(seed, "embeddings")
-    centres = rng.normal(size=(n_clusters, dim))
-    centres /= np.linalg.norm(centres, axis=1, keepdims=True)
-    labels = rng.integers(0, n_clusters, n)
-    vecs = centres[labels] + rng.normal(scale=noise / np.sqrt(dim), size=(n, dim))
-    picks = rng.choice(n, n_queries, replace=False)
-    q = vecs[picks] + rng.normal(scale=0.5 * noise / np.sqrt(dim), size=(n_queries, dim))
+    vecs = unit(rng.normal(size=(n, dim)))
+    labels = rng.integers(0, n_labels, n)
+    q = vecs[rng.choice(n, n_queries, replace=False)]
     return vecs.astype(np.float32), labels.astype(np.int32), q.astype(np.float32)
 
 

@@ -4,10 +4,15 @@ Times are span self times (a layer's span minus its child spans), the
 median over the run's traced passes. Spark counters come from the event
 log, attributed to a layer through the span each job ran under. A layer
 a workload never calls reports 0.
+
+Names live here and in BENCHMARK.json; units only in BENCHMARK.json. The
+runner refuses to start when the two name sets differ.
 """
 
 from __future__ import annotations
 
+import json
+import os
 import statistics
 from collections import defaultdict
 
@@ -64,40 +69,39 @@ SHARES = {
 }
 
 # counts and rates the workloads set directly (Workload.layer)
-DIRECT = {
-    "flagship.spans": "count", "flagship.refs": "count",
-    "tile_kernel.rows_in": "count", "tile_kernel.rows_out": "count",
-    "decode.tiles_ok": "count", "decode.tiles_error": "count",
-    "tiff.decode_MBps": "MB/s", "tiff.file_bytes_read": "bytes",
-    "cells.s2_ids_per_s": "1/s", "cells.hex_ids_per_s": "1/s",
-    "pip.points": "count", "pip.matches": "count",
-    "checkpoint.bytes_written": "bytes", "checkpoint.files_written": "count",
-    "dedupe.pairs_out.ngram": "count", "dedupe.pairs_out.minhash": "count",
-    "dedupe.pairs_out.simhash": "count",
-    "ann.recall_at_10.ivfpq": "fraction", "ann.recall_at_10.pq": "fraction",
-    "ann.recall_at_10.lsh": "fraction",
-}
+DIRECT = (
+    "flagship.spans", "flagship.refs", "tile_kernel.rows_in", "tile_kernel.rows_out",
+    "decode.tiles_ok", "decode.tiles_error", "tiff.decode_MBps", "tiff.file_bytes_read",
+    "cells.s2_ids_per_s", "cells.hex_ids_per_s", "pip.points", "pip.matches",
+    "checkpoint.bytes_written", "checkpoint.files_written",
+    "dedupe.pairs_out.ngram", "dedupe.pairs_out.minhash", "dedupe.pairs_out.simhash",
+    "ann.recall_at_10.ivfpq", "ann.recall_at_10.pq", "ann.recall_at_10.lsh",
+)
+RUN_LEVEL = ("spark.gc_s", "trace.pass_s", "trace.overhead_s")
 
 
-def _unit(name: str) -> str:
-    if "bytes" in name:
-        return "bytes"
-    if name.endswith("_mb"):
-        return "MB"
-    if name.startswith("share."):
-        return "fraction"
-    if name.endswith(("_s", ".s")):
-        return "s"
-    return "count"
+def per_layer_names() -> set[str]:
+    """Every per-layer metric ``per_layer_metrics`` reports."""
+    return {*SPAN_METRICS.values(), *SPAN_COUNTERS, *PASS_COUNTERS, *SHARES, *DIRECT,
+            *RUN_LEVEL}
 
 
-def metric_units() -> dict[str, str]:
-    """Every per-layer metric name with its unit."""
-    names = [*SPAN_METRICS.values(), *SPAN_COUNTERS, *PASS_COUNTERS, *SHARES]
-    out = {n: _unit(n) for n in names}
-    out.update(DIRECT)
-    out.update({"spark.gc_s": "s", "trace.pass_s": "s", "trace.overhead_s": "s"})
-    return out
+def declared_metrics(root: str) -> dict[str, dict[str, str]]:
+    """{"end_to_end": {name: unit}, "per_layer": {name: unit}} as
+    BENCHMARK.json in ``root`` declares them."""
+    with open(os.path.join(root, "BENCHMARK.json")) as f:
+        spec = json.load(f)
+    return {kind: {m["name"]: m["unit"] for m in spec[kind]}
+            for kind in ("end_to_end", "per_layer")}
+
+
+def as_metrics(vals: dict[str, float], units: dict[str, str]) -> dict:
+    """``vals`` in the result schema, with the declared units; the name
+    sets must be equal."""
+    if vals.keys() != units.keys():
+        raise RuntimeError(f"metrics {sorted(vals.keys() ^ units.keys())} "
+                           "are not both measured and declared")
+    return {k: {"value": float(vals[k]), "unit": u} for k, u in units.items()}
 
 
 def _matches(name: str, prefixes) -> bool:
@@ -110,8 +114,7 @@ def _median(xs) -> float:
 
 
 def per_layer_metrics(tr, ev: dict, direct: dict, plain_s: list, traced_s: list,
-                      gc_s_per_pass: float) -> dict:
-    units = metric_units()
+                      gc_s_per_pass: float) -> dict[str, float]:
     vals: dict[str, float] = {}
     passes = sorted({s["pass"] for s in tr.spans if not s["pass"].startswith("probe")})
     own = tr.self_times()
@@ -159,4 +162,4 @@ def per_layer_metrics(tr, ev: dict, direct: dict, plain_s: list, traced_s: list,
     vals["spark.gc_s"] = gc_s_per_pass
     vals["trace.pass_s"] = _median(traced_s)
     vals["trace.overhead_s"] = _median(traced_s) - _median(plain_s)
-    return {k: {"value": vals[k], "unit": units[k]} for k in units}
+    return vals

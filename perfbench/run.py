@@ -28,15 +28,15 @@ import threading
 import time
 import traceback
 
-from layers import per_layer_metrics
-from tracing import Tracer, other_spark_jvms, parse_event_log, peak_rss_mb, process_tree, \
-    reset_peak_rss
+from layers import as_metrics, declared_metrics, per_layer_metrics, per_layer_names
+from tracing import Tracer, cpu_ticks, other_spark_jvms, parse_event_log, peak_rss_mb, \
+    process_tree, reset_peak_rss
 from workloads import WORKLOADS, CheckFailed, probe_all_layers
 
 ROOT = os.getcwd()
-GEN_REPEATS = 3  # set-up input generation runs; setup_s uses their median
 WARMUP_PASSES = 1  # untimed, checked; part of setup_s
-MIN_PASSES = 1
+MIN_PASSES = 3  # untraced runs: the median must be able to reject one slow pass
+E2E_NAMES = {"pass_s", "throughput", "setup_s", "peak_rss_mb", "recall"}
 
 
 def log(msg: str) -> None:
@@ -149,7 +149,7 @@ def control_job(spark) -> float:
     spark.conf.set("spark.sql.ansi.enabled", "false")  # the sum wraps by design
     try:
         t0 = time.perf_counter()
-        spark.range(100_000_000, numPartitions=16).select(
+        spark.range(20_000_000, numPartitions=16).select(
             F.sum(F.xxhash64(F.col("id"), F.col("id") * 3, F.col("id") + 7))
         ).collect()
         return time.perf_counter() - t0
@@ -189,6 +189,13 @@ def main() -> int:
     if args.workload not in WORKLOADS:
         log(f"perfbench: unknown workload {args.workload!r}; one of {sorted(WORKLOADS)}")
         return 2
+    declared = declared_metrics(ROOT)
+    for kind, names in (("end_to_end", E2E_NAMES), ("per_layer", per_layer_names())):
+        if names != declared[kind].keys():
+            log(f"perfbench: {kind} metrics differ from BENCHMARK.json: "
+                f"undeclared {sorted(names - declared[kind].keys())}, "
+                f"not measured {sorted(declared[kind].keys() - names)}")
+            return 2
 
     base = os.path.join(ROOT, ".perfbench")
     # no pid in the name: the media_ref paths inside the inputs are then
@@ -208,12 +215,12 @@ def main() -> int:
         log(f"perfbench: WARNING other Spark JVMs running {others}: numbers are suspect")
 
     try:
-        return run(args, work, results, others)
+        return run(args, work, results, others, declared)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
 
-def run(args, work: str, results: str, others: list[int]) -> int:
+def run(args, work: str, results: str, others: list[int], declared: dict) -> int:
     trace = bool(args.trace)
     t0 = time.perf_counter()
     spark = start_spark(work, trace)
@@ -226,14 +233,9 @@ def run(args, work: str, results: str, others: list[int]) -> int:
               "other_spark_jvms": others}
     try:
         w = WORKLOADS[args.workload](spark, args.seed)
-        gen_s = []
-        for r in range(GEN_REPEATS):
-            d = os.path.join(work, f"in{r}")
-            t = time.perf_counter()
-            w.generate(d)
-            gen_s.append(time.perf_counter() - t)
-            if r:  # every repeat writes identical inputs; keep the last
-                shutil.rmtree(os.path.join(work, f"in{r - 1}"))
+        t = time.perf_counter()
+        w.generate(os.path.join(work, "in"))  # never cached: every run generates
+        gen_s = time.perf_counter() - t
 
         off = Tracer(sc, on=False)
         tr = Tracer(sc, on=True) if trace else off
@@ -266,20 +268,30 @@ def run(args, work: str, results: str, others: list[int]) -> int:
         for i in range(WARMUP_PASSES + trace):
             one_pass(off, f"warmup{i}")
         warm_s = time.perf_counter() - t
-        setup_s = session_s + statistics.median(gen_s) + warm_s
+        setup_s = session_s + gen_s + warm_s
 
         sampler = RssSampler(jvm_pid)
         gc0 = jvm_gc_s(sc)
+        steal0, ticks0 = cpu_ticks()
         t_end = time.perf_counter() + args.seconds
         k = 0
-        while (time.perf_counter() < t_end or len(plain_s) < MIN_PASSES
-               or (trace and not traced_s)):
+
+        def done() -> bool:
+            if time.perf_counter() < t_end:
+                return False
+            if trace:  # per-layer values need one pass of each kind
+                return bool(plain_s and traced_s)
+            return len(plain_s) >= MIN_PASSES
+
+        while not done():
             if trace and k % 2:
                 traced_s.append(one_pass(tr, f"p{k}"))
             else:
                 plain_s.append(one_pass(off, f"p{k}"))
             k += 1
         peak_mb = sampler.stop()
+        steal1, ticks1 = cpu_ticks()
+        record["host_steal_share"] = (steal1 - steal0) / max(1, ticks1 - ticks0)
         gc_per_pass = (jvm_gc_s(sc) - gc0) / k
         record["peak_rss_by_process_mb"] = sampler.by_process()
 
@@ -297,35 +309,38 @@ def run(args, work: str, results: str, others: list[int]) -> int:
         stop_spark(spark)
 
     p_q, p_v = high_percentile(plain_s)
-    e2e = {
-        "pass_s": (statistics.median(plain_s), "s"),
-        "throughput": (w.units_per_pass * len(plain_s) / sum(plain_s), "units/s"),
-        "setup_s": (setup_s, "s"),
-        "peak_rss_mb": (peak_mb, "MB"),
-        "recall": (statistics.median(recalls) if recalls else 0.0, "fraction"),
-    }
+    e2e = as_metrics({
+        "pass_s": statistics.median(plain_s),
+        "throughput": w.units_per_pass / statistics.median(plain_s),
+        "setup_s": setup_s,
+        "peak_rss_mb": peak_mb,
+        "recall": statistics.median(recalls) if recalls else 0.0,
+    }, declared["end_to_end"])
     record.update({
         "pass_times_s": plain_s, "traced_pass_times_s": traced_s,
         "pass_s_percentile": {"q": p_q, "value": p_v, "n": len(plain_s)},
         "setup_parts_s": {"session": session_s, "generate": gen_s, "warmup": warm_s},
         "error_rate": failed / attempted, "attempted": attempted, "failed": failed,
         "cross_check_ok": cross_ok,
-        "end_to_end": {k: {"value": v, "unit": u} for k, (v, u) in e2e.items()},
+        "end_to_end": e2e,
     })
     log(f"{args.workload} seed={args.seed}: nproc={os.cpu_count()} {sc.master} "
-        f"control={record['control_s']:.3f}s; a throughput unit is one {w.unit}")
-    for name, (v, u) in e2e.items():
-        log(f"  {name} = {v:.6g} {u}")
+        f"control={record['control_s']:.3f}s steal={record['host_steal_share']:.3f}; "
+        f"a throughput unit is one {w.unit}")
+    for name, m in e2e.items():
+        log(f"  {name} = {m['value']:.6g} {m['unit']}")
     log(f"  pass_s p{round(100 * p_q)} = {p_v:.6g} s (n={len(plain_s)})")
     log(f"  error_rate = {failed / attempted:.6g} fraction ({failed}/{attempted})")
 
     if trace:
-        metrics = per_layer_metrics(tr, parse_event_log(os.path.join(work, "eventlog")),
-                                    w.layer, plain_s, traced_s, gc_per_pass)
+        metrics = as_metrics(
+            per_layer_metrics(tr, parse_event_log(os.path.join(work, "eventlog")),
+                              w.layer, plain_s, traced_s, gc_per_pass),
+            declared["per_layer"])
         tr.dump(os.path.join(results, f"{args.workload}-seed{args.seed}-spans.jsonl"))
         record["per_layer"] = metrics
     else:
-        metrics = {k: {"value": v, "unit": u} for k, (v, u) in e2e.items()}
+        metrics = e2e
     tag = f"{args.workload}-seed{args.seed}-trace{args.trace}"
     with open(os.path.join(results, f"{tag}.json"), "w") as f:
         json.dump(record, f, indent=1, default=float)

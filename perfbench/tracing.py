@@ -194,6 +194,14 @@ def peak_rss_mb(pids: list[int]) -> float:
     return sum(_status_kb(p, "VmHWM") for p in pids) / 1024.0
 
 
+def cpu_ticks() -> tuple[int, int]:
+    """(steal, total) CPU ticks of the machine since boot (/proc/stat).
+    Steal is time the hypervisor gave this VM's CPUs to someone else."""
+    with open("/proc/stat") as f:
+        v = [int(x) for x in f.readline().split()[1:]]
+    return v[7], sum(v)
+
+
 def other_spark_jvms(own: set[int]) -> list[int]:
     """PIDs of Spark JVMs outside our own process tree."""
     found = []

@@ -169,6 +169,9 @@ class TileIngest(Workload):
     referenced about once: decode, cell assignment, PIP and the
     checkpoint write do the work; the span side is small."""
 
+    # The repo's own bench farm (fixtures.cogs.generate_tile_farm) is 400
+    # deflate/raw tiles of 32-64 px; this farm is twice as many files at
+    # twice the side (64-128 px), with every codec the reader supports.
     unit = "tile"
     N_TILES = 800
     N_CORRUPT = 8
@@ -224,11 +227,12 @@ class TileIngest(Workload):
         try:
             recall = check_aggregate(agg, self.expected)
             require(n_no_cell == 0, f"{n_no_cell} ok tiles without a cell")
-            st = {r["status"]: r["n"] for r in enriched.groupBy("status").agg(
-                F.countDistinct("media_ref").alias("n")).collect()}
+            by_status = enriched.groupBy("status").agg(
+                F.countDistinct("media_ref").alias("n"),
+                F.count("s2_cell").alias("with_cell")).collect()
+            st = {r["status"]: r["n"] for r in by_status}
             require(st == self.status, f"decode status {st} != manifest {self.status}")
-            ok_rows = enriched.filter(
-                (F.col("status") == "ok") & F.col("s2_cell").isNotNull()).count()
+            ok_rows = sum(r["with_cell"] for r in by_status if r["status"] == "ok")
             back = read_checkpointed(self.spark, ckpt).count()
             require(res["rows"] == back == ok_rows == self.sink_rows,
                     f"sink rows: reported {res['rows']}, read back {back}, "
@@ -283,36 +287,38 @@ def part_key_level(tiles, par: int) -> int:
 
 # -- text dedupe -----------------------------------------------------------------
 class TextDedupe(Workload):
-    """ngram Jaccard + MinHash LSH + SimHash over a corpus sharing a hot
-    vocabulary, with planted near-dups and exact copies."""
+    """ngram Jaccard + MinHash LSH + SimHash over a corpus with the sf0.1
+    `documents` shape (gen.make_corpus): a 30-word vocabulary shared by
+    every doc, planted near-dups and exact copies. Thresholds are those of
+    the engine's own queries: q16 (ngram J >= 0.10), q23 (MinHash J >= 0.5),
+    q24 (SimHash Hamming <= 6, blocked vs exact scan)."""
 
     unit = "doc"
-    N_BASE = 1500
-    NGRAM_T = 0.5
+    N_DOCS = 1000
+    NGRAM_T = 0.10
     MINHASH_T = 0.5
     HAMMING = 6
 
     def generate(self, d):
         self.dir = d
-        ids, texts, near, exact = gen.make_corpus(self.N_BASE, self.seed)
+        ids, texts, near, exact = gen.make_corpus(self.N_DOCS, self.seed)
+        self.texts = texts
         self.path = os.path.join(d, "docs")
         os.makedirs(self.path)
         for f, sl in enumerate(np.array_split(np.arange(len(ids)), 4)):
             pq.write_table(pa.table({"doc_id": ids[sl], "text": [texts[i] for i in sl]}),
                            os.path.join(self.path, f"part-{f}.parquet"))
         self.exact = set(exact)
-        # pairs each path must or should find, by exact Jaccard computed here
-        self.ngram_must = {(a, b): round(gen.word_jaccard(texts[a], texts[b]), 6)
-                           for a, b in near + exact}
-        self.ngram_must = {p: j for p, j in self.ngram_must.items() if j >= self.NGRAM_T}
+        # every planted pair clears every threshold (a copy plus one word)
+        self.ngram_must = {p: gen.word_jaccard(texts[p[0]], texts[p[1]]) for p in near + exact}
         self.minhash_truth = {p for p in near if gen.char_jaccard(texts[p[0]], texts[p[1]])
                               >= self.MINHASH_T} | self.exact
         self.units_per_pass = len(ids)
+        self._simhash_exact = None
 
     def run(self, tr, pass_id):
         from cog3pio_spark.operators.dedupe import (
-            minhash_lsh_dupes, ngram_jaccard_pairs, simhash_dupes,
-            simhash_hamming_pairs_exact, simhash_signatures,
+            minhash_lsh_dupes, ngram_jaccard_pairs, simhash_dupes, simhash_signatures,
         )
 
         docs = self.spark.read.parquet(self.path)
@@ -322,29 +328,42 @@ class TextDedupe(Workload):
             mh = minhash_lsh_dupes(docs, jaccard_threshold=self.MINHASH_T).select(
                 "id_a", "id_b").collect()
         with tr.span("operators.dedupe.simhash"):
-            sh = simhash_signatures(docs).localCheckpoint(eager=False)
+            sh = simhash_signatures(docs).localCheckpoint(eager=False)  # as q24
             blocked = simhash_dupes(docs, max_hamming=self.HAMMING, sh_frame=sh).collect()
-            exact = simhash_hamming_pairs_exact(
-                docs, max_hamming=self.HAMMING, sh_frame=sh).select(
-                "id_a", "id_b", "hamming").collect()
-        return ng, mh, blocked, exact
+        return ng, mh, blocked
 
     def check(self, out):
-        ng, mh, blocked, exact = out
+        ng, mh, blocked = out
         ng_map = {(r["id_a"], r["id_b"]): r["jaccard"] for r in ng}
         for p, j in self.ngram_must.items():
             require(p in ng_map, f"ngram missed planted pair {p} (J={j})")
-            require(abs(ng_map[p] - j) <= 1e-6, f"ngram J{p} {ng_map[p]} != {j}")
+        for (a, b), j in ng_map.items():  # every pair returned: its exact Jaccard
+            want = gen.word_jaccard(self.texts[a], self.texts[b])
+            require(abs(j - want) <= 1e-6 and want >= self.NGRAM_T,
+                    f"ngram J({a}, {b}) {j} != exact {want}")
         bl = {(r["id_a"], r["id_b"], r["hamming"]) for r in blocked}
-        ex = {(r["id_a"], r["id_b"], r["hamming"]) for r in exact}
+        ex = self.simhash_exact_pairs()
         require(bl == ex, f"simhash blocked != exact scan ({len(bl ^ ex)} pairs differ)")
         require(all((a, b, 0) in ex for a, b in self.exact), "simhash missed an exact copy")
         found = {(r["id_a"], r["id_b"]) for r in mh}
         require(self.exact <= found, "minhash missed an exact copy")
         return len(found & self.minhash_truth) / len(self.minhash_truth)
 
+    def simhash_exact_pairs(self) -> set:
+        """The q24 oracle for the blocked pairs: the O(n²) Hamming scan over
+        fresh signatures. Its answer does not depend on the pass, so it runs
+        once per run, in the warm-up pass's check, outside any timing."""
+        from cog3pio_spark.operators.dedupe import simhash_hamming_pairs_exact
+
+        if self._simhash_exact is None:
+            rows = simhash_hamming_pairs_exact(
+                self.spark.read.parquet(self.path), max_hamming=self.HAMMING).select(
+                "id_a", "id_b", "hamming").collect()
+            self._simhash_exact = {(r["id_a"], r["id_b"], r["hamming"]) for r in rows}
+        return self._simhash_exact
+
     def after_traced_pass(self, out):
-        ng, mh, blocked, _ = out
+        ng, mh, blocked = out
         self.layer.update({"dedupe.pairs_out.ngram": len(ng), "dedupe.pairs_out.minhash": len(mh),
                            "dedupe.pairs_out.simhash": len(blocked)})
 
@@ -353,21 +372,23 @@ class TextDedupe(Workload):
 def probe_all_layers(w: Workload, tr) -> None:
     """Traced runs only, after the passes. Every per-layer metric is
     measured in every traced run: the layers the workload's own pass does
-    not call run here on small inputs — one traced pass of the other
-    workload, the modular tile operators and kernels, and every ANN query
-    path. These are first calls in the session, so they include set-up."""
+    not call run here on small inputs — a pass of the other workload, the
+    modular tile operators and kernels, and every ANN query path. Each
+    probe runs twice; the first round ("probe-warm") absorbs one-time
+    set-up (Python-worker imports, pandas_udf set-up, codegen) and is left
+    out of the metrics."""
     mini = os.path.join(w.dir, "mini")
     tiles = w if isinstance(w, TileIngest) else _small(TileIngest, w, mini, N_TILES=100, N_CORRUPT=1)
-    text = w if isinstance(w, TextDedupe) else _small(TextDedupe, w, mini, N_BASE=300)
-    tr.pass_id = "probe"
-    for other in (tiles, text):
-        if other is not w:
-            out = other.run(tr, "probe")
-            other.after_traced_pass(out)
-            other.check(out)
+    text = w if isinstance(w, TextDedupe) else _small(TextDedupe, w, mini, N_DOCS=300)
+    ann = AnnProbe(w.spark, w.seed, os.path.join(w.dir, "ann"))
+    for tr.pass_id in ("probe-warm", "probe"):
+        for other in (tiles, text):
+            if other is not w:
+                out = other.run(tr, tr.pass_id)
+                other.after_traced_pass(out)
+                other.check(out)
+        rec = ann.run(tr)
     tile_probes(tiles, tr)
-    tr.pass_id = "probe"
-    rec = AnnProbe(w.spark, w.seed, os.path.join(w.dir, "ann")).run(tr)
     for name in ("ivfpq", "pq", "lsh"):
         w.layer[f"ann.recall_at_10.{name}"] = rec[name]
     for other in (tiles, text):
@@ -386,7 +407,7 @@ def _small(cls, w: Workload, d: str, **sizes) -> Workload:
 # -- ANN query paths ---------------------------------------------------------------
 class AnnProbe:
     """A query batch through every ANN top-k path plus blocked top pairs,
-    over seeded clustered embeddings. Not a workload of its own (see
+    over seeded embeddings of the sf0.1 shape. Not a workload of its own (see
     README.md): traced runs time each path's public function and check it
     against the exact answer computed here."""
 
