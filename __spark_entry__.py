@@ -791,8 +791,8 @@ def q32_lsh_topk(spark, sf):
     trick): with n_planes=2 the probe pool is home + both single flips +
     the one pair flip = all 4 buckets, so every query scores the whole
     corpus and LSH top-k provably equals brute force — giving the LSH
-    machinery (bucketing, margin-ranked probe generation, broadcast probe
-    join, two-stage top-k) an exact DuckDB oracle. The production
+    machinery (bucketing, margin-ranked probe generation, the shared
+    probe → batch-score → top-k core) an exact DuckDB oracle. The production
     approximate shape (n_probes ≪ 2^n_planes) is pinned by
     tests/test_training_ops.py::test_lsh_query_directed_probes_*."""
     from cog3pio_spark.operators.ann import lsh_topk
@@ -882,8 +882,8 @@ def q36_ivf_topk(spark, sf):
     """IVF top-k with nprobe covering ALL lists: every vector lives in
     exactly one list, so probing all of them scores the whole corpus —
     provably equal to brute force, which gives the IVF machinery (codebook
-    train, list assignment, int-key broadcast join, two-stage top-k) an
-    exact DuckDB oracle. The production approximate shape (nprobe ≪ lists)
+    train, list assignment, the shared probe → batch-score → top-k core)
+    an exact DuckDB oracle. The production approximate shape (nprobe ≪ lists)
     is pinned by tests/test_training_ops.py::test_ivf_topk_recall."""
     from cog3pio_spark.operators.ann import ivf_topk
 
@@ -1143,7 +1143,7 @@ def q52_ivfpq_topk(spark, sf):
     n_centroids probes every list, so the whole capped corpus is scored —
     IVF-PQ provably equals brute force while the full machinery (coarse
     train, residual codebooks, m-byte codes partitioned by list, pushable
-    isin pruning, broadcast probe join, per-batch partial top-k) runs for
+    isin pruning, per-batch per-list ADC partial top-k) runs for
     real. The production doubly-approximate shape stays pinned by
     tests/test_training_ops.py::test_ivfpq_* (recall, residual gain,
     partition-pruning plan)."""

@@ -1,17 +1,36 @@
 """Similarity search over embedding columns (task brief: ANN first-class).
 
-* brute_force_topk — exact cosine top-k: queries broadcast, dot products via
-  a vectorized pandas_udf (numpy matmul per Arrow batch — one BLAS call per
-  batch, not per row), window row_number for the k cut. This is the
-  correctness baseline and has a DuckDB oracle (list_cosine_similarity).
-* lsh_topk         — scale path: random-hyperplane LSH buckets both sides;
-  only same-bucket pairs are scored, multi-probe via sign-flip neighbors.
-  The shuffle key is the (table, bucket) pair; the big side is never
-  crossed with the whole query set.
-* embedding_dupes  — near-duplicate pairs by cosine ≥ τ within LSH buckets.
+Every top-k path is one idea — assign stored vectors to keys, probe keys per
+query, score, cut per-query top-k — so every path runs the same core,
+``_probe_topk``: the query batch is collected once (guarded), each query's
+probed keys are computed in numpy on the driver, the stored side is filtered
+by one literal ``isin(probed keys)`` (a pushable predicate: it prunes a
+key-partitioned layout at file-listing time), one ``mapInPandas`` kernel
+scores each Arrow batch per distinct key against only the queries probing
+that key and keeps a partial top-k (exact: top-k is a monoid), and one
+per-query ``row_number`` window cuts the result. Ordering uses unrounded
+scores; the emitted score is rounded to 6 places.
+
+The public top-k functions are index constructors over that core:
+
+* brute_force_topk — no key: every query scores every row (exact cosine;
+  the correctness baseline with a DuckDB oracle, list_cosine_similarity).
+* lsh_topk         — key = random-hyperplane bucket; probes = home bucket
+  plus the margin-ranked sign flips of ``query_directed_probes``.
+* ivf_topk         — key = nearest k-means centroid; probes = the ``nprobe``
+  nearest centroids.
+* ivf2_topk        — key = flat coarse×fine list id; probes = coarse ×
+  fine nearest lists.
+* pq_topk          — no key; ADC scoring over m-byte PQ codes.
+* ivfpq_topk       — key = stored ``ivf_list``; ADC over residual codes.
+
+Pair search (``top_cosine_pairs_blocked``, ``embedding_dupes``) shares the
+multi-table LSH pair kernel ``_lsh_blocked_pairs``.
 """
 
 from __future__ import annotations
+
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -24,38 +43,8 @@ from pyspark.sql.functions import pandas_udf
 # shared default sample size for all codebook/centroid trainers (hoisted so
 # composed operators like ivfpq_topk can never drift from the trainers)
 TRAIN_SAMPLE = 4096
-
-
-def _collect_query_batch(
-    queries: DataFrame, query_id_col: str, vec_col: str, max_queries: int
-) -> list:
-    """Bounded driver-side collection of a *serving-sized* query batch.
-
-    pq_topk/ivfpq_topk build a per-query ADC lookup table on the driver, so
-    the query set must be small (the documented serving shape). The guard is
-    a bounded ``limit(max+1).count()`` probe — never an O(n) scan of the set
-    it refuses (same pattern as top_cosine_pairs' max_rows guard) — and it
-    runs in the SAME job as the fetch (r5 review: take(max+1) IS the
-    guarded collect — the former limit().count() probe spent an extra
-    driver job and left a TOCTOU window; same convention as
-    pip_join.pack_polygons), so an oversized query set errors loudly
-    instead of OOMing the driver (VERDICT r3 #2)."""
-    rows = queries.select(query_id_col, vec_col).take(max_queries + 1)
-    if len(rows) > max_queries:
-        raise ValueError(
-            f"query set exceeds max_queries={max_queries}: the PQ/IVFPQ LUT "
-            f"path collects queries to the driver (serving shape). For bulk "
-            f"query sets use a join-based scorer (ivf_topk/lsh_topk keep "
-            f"queries distributed) or raise max_queries= explicitly."
-        )
-    if not rows:
-        # r5 review: an empty query set used to crash downstream in
-        # _normalize (numpy AxisError on a 0-dim matrix) — refuse clearly
-        raise ValueError(
-            "query set is empty: nothing to score (an upstream filter "
-            "matched no rows?)"
-        )
-    return rows
+# bound on the query batch every collected-query path takes to the driver
+MAX_QUERIES = 10_000
 
 
 def _normalize(mat: np.ndarray) -> np.ndarray:
@@ -67,6 +56,145 @@ def _normalize(mat: np.ndarray) -> np.ndarray:
     return mat / n
 
 
+class _Queries(NamedTuple):
+    """A collected query batch: output field (name + input dtype), ids and
+    raw float64 vectors (row i of ``raw`` belongs to ``ids[i]``)."""
+
+    field: T.StructField
+    ids: np.ndarray
+    raw: np.ndarray
+
+
+def _collect_query_batch(
+    queries: DataFrame, query_id_col: str, vec_col: str, max_queries: int = MAX_QUERIES
+) -> _Queries:
+    """Bounded driver-side collection of a *serving-sized* query batch.
+
+    Every top-k path computes its probes (and pq/ivfpq their ADC lookup
+    tables) on the driver, so the query set must be small (the documented
+    serving shape). The guard is a bounded ``take(max+1)`` — never an O(n)
+    scan of the set it refuses — and it IS the fetch, in one driver job
+    (same convention as pip_join.pack_polygons), so an oversized query set
+    errors loudly instead of OOMing the driver (VERDICT r3 #2). Query ids
+    keep their INPUT dtype and column name end-to-end (ADVICE r3)."""
+    rows = queries.select(query_id_col, vec_col).take(max_queries + 1)
+    if len(rows) > max_queries:
+        raise ValueError(
+            f"query set exceeds max_queries={max_queries}: the ANN top-k "
+            f"paths collect the query batch to the driver (serving shape). "
+            f"Split the batch, or raise max_queries= where the function "
+            f"takes it."
+        )
+    if not rows:
+        # r5 review: an empty query set used to crash downstream in
+        # _normalize (numpy AxisError on a 0-dim matrix) — refuse clearly
+        raise ValueError(
+            "query set is empty: nothing to score (an upstream filter "
+            "matched no rows?)"
+        )
+    return _Queries(
+        T.StructField(query_id_col, queries.schema[query_id_col].dataType),
+        np.asarray([r[0] for r in rows]),
+        np.array([list(r[1]) for r in rows], dtype=np.float64),
+    )
+
+
+class _Index(NamedTuple):
+    """One ANN path as the core sees it. ``key``: the stored side's key
+    column, with ``probes`` (n_queries, n_probes) the keys each query
+    scores — both None when every query scores every row (one constant
+    key). ``score(sel, rows, key)`` gives the (len(sel), len(rows)) scores
+    of queries ``sel`` against ``rows`` of the stacked ``payload`` column."""
+
+    payload: str
+    score: Callable
+    key: str | None = None
+    probes: np.ndarray | None = None
+
+
+def _cosine_index(qmat: np.ndarray, vec_col: str, **keyed) -> _Index:
+    return _Index(vec_col, lambda sel, vecs, key: qmat[sel] @ _normalize(vecs).T, **keyed)
+
+
+def _adc_index(lut: np.ndarray, qc: np.ndarray | None = None, **keyed) -> _Index:
+    """ADC over PQ codes: score = Σ_j LUT[q, j, code_j], plus the IVFADC
+    constant ⟨q, c_key⟩ (``qc[q, key]``) when codes quantize residuals."""
+    j = np.arange(lut.shape[1])[None, :]
+
+    def score(sel, codes, key):
+        s = lut[sel][:, j, codes.astype(np.int64)].sum(axis=2)
+        return s if qc is None else qc[sel, key][:, None] + s
+
+    return _Index("pq", score, **keyed)
+
+
+def _key_udf(return_type):
+    """pandas_udf decorator for a stored-side key column. Marked
+    nondeterministic (it is not) so the core's ``isin(probed keys)`` filter
+    stays above it: a deterministic UDF under that filter is pushed below
+    the projection and evaluated twice."""
+    return lambda fn: pandas_udf(return_type)(fn).asNondeterministic()
+
+
+def _probe_topk(
+    stored: DataFrame,
+    id_col: str,
+    queries: _Queries,
+    index: _Index,
+    k: int,
+    score_name: str,
+) -> DataFrame:
+    """The shared top-k core (module docstring). Returns (query, rank, id,
+    score) with the score rounded to 6 places."""
+    qcol, qids = queries.field.name, queries.ids
+    if index.key is None:  # every query scores every row: one constant key
+        key_col, probes = F.lit(0), np.zeros((len(qids), 1), dtype=np.int64)
+    else:
+        key_col, probes = F.col(index.key), index.probes
+        # literal isin BEFORE scoring: prunes key-partitioned storage at
+        # file-listing time (test_ivfpq_scan_prunes_lists)
+        stored = stored.filter(key_col.isin(np.unique(probes).tolist()))
+    # key → indices of the queries probing it
+    probing = {p: np.flatnonzero((probes == p).any(axis=1)) for p in np.unique(probes).tolist()}
+    schema = T.StructType(
+        [
+            queries.field,
+            T.StructField(id_col, stored.schema[id_col].dataType),
+            T.StructField(score_name, T.DoubleType()),
+        ]
+    )
+
+    def _partial_topk(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids, keys = pdf[id_col].to_numpy(), pdf["_key"].to_numpy()
+            mat = np.vstack(pdf[index.payload].to_numpy())
+            parts = []
+            for key in np.unique(keys).tolist():
+                rows = keys == key
+                sel = probing[key]
+                s = index.score(sel, mat[rows], key)  # unrounded for ordering
+                bids = ids[rows]
+                order = np.lexsort((np.broadcast_to(bids, s.shape), -s))[:, :k]
+                parts.append(pd.DataFrame({
+                    qcol: np.repeat(qids[sel], order.shape[1]),
+                    id_col: bids[order].ravel(),
+                    score_name: np.take_along_axis(s, order, axis=1).ravel(),
+                }))
+            yield pd.concat(parts, ignore_index=True)
+
+    scored = stored.select(id_col, index.payload, key_col.alias("_key")).mapInPandas(
+        _partial_topk, schema
+    )
+    w = Window.partitionBy(qcol).orderBy(F.col(score_name).desc(), F.col(id_col).asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(qcol, "rank", id_col, F.round(score_name, 6).alias(score_name))
+    )
+
+
 def brute_force_topk(
     vectors: DataFrame,
     queries: list[tuple[int, list[float]]],
@@ -76,84 +204,21 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k of ``vectors`` for each (query_id, query_vec).
 
-    The query matrix rides the UDF closure (auto-broadcast with the task
+    The query matrix rides the kernel closure (auto-broadcast with the task
     binary); scoring is one numpy matmul per Arrow batch.
     Returns (query_id, rank, vec_id, cosine).
     """
-    from typing import Iterator as _It
-
     if not queries:
         # r5 review: [] crashed in _normalize with an obscure numpy
         # AxisError — refuse with the actual problem named
         raise ValueError("queries list is empty: nothing to score")
-    qids = np.array([q[0] for q in queries], dtype=np.int64)
-    qmat = _normalize(np.array([q[1] for q in queries], dtype=np.float64))
-
-    # partial top-k per Arrow batch (exact: top-k is a monoid), so the
-    # final per-query window ranks ≤ batches·|queries|·k rows instead of
-    # shuffling every (vector, query) score — the 10⁹-vector-safe shape.
-    # Ordering uses UNROUNDED cosine (matching the oracle's ORDER BY);
-    # rounding happens only on the emitted value.
-    part_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField(id_col, vectors.schema[id_col].dataType),
-            T.StructField("cosine", T.DoubleType()),
-        ]
+    batch = _Queries(
+        T.StructField("query_id", T.LongType()),
+        np.array([q[0] for q in queries], dtype=np.int64),
+        np.array([q[1] for q in queries], dtype=np.float64),
     )
-
-    def _partial_topk(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = _normalize(np.vstack(pdf[vec_col].to_numpy()))
-            ids = pdf[id_col].to_numpy()
-            sims = qmat @ mat.T  # (n_q, batch) — unrounded for ordering
-            out = {"query_id": [], id_col: [], "cosine": []}
-            for qi in range(len(qids)):
-                order = np.lexsort((ids, -sims[qi]))[:k]
-                out["query_id"].extend([int(qids[qi])] * len(order))
-                out[id_col].extend(ids[order].tolist())
-                out["cosine"].extend(sims[qi][order].tolist())
-            yield pd.DataFrame(out)
-
-    scored = vectors.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        _partial_topk, part_schema
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", F.col(id_col), F.round("cosine", 6).alias("cosine"))
-    )
-
-
-def _two_stage_topk(
-    scored: DataFrame, k: int, query_id_col: str, id_col: str, score_col: str = "cosine"
-) -> DataFrame:
-    """Per-query top-k without funneling all of a query's candidates into
-    one window task: stage 1 ranks within (query, physical partition) —
-    parallel — keeping ≤ k rows per partition; stage 2 ranks the ≤
-    partitions·k survivors. Top-k is a monoid, so the result is identical
-    to a single global per-query window (ties broken the same way in both
-    stages). This is the hot-partition fix for skewed/huge candidate sets
-    (a popular IVF list at 10⁹ vectors lands ~10⁸ candidate rows on one
-    query's window task otherwise)."""
-    order = [F.col(score_col).desc(), F.col(id_col).asc()]
-    w1 = Window.partitionBy(query_id_col, "_pid").orderBy(*order)
-    pruned = (
-        scored.withColumn("_pid", F.spark_partition_id())
-        .withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= k)
-        .drop("_pid", "_r1")
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(*order)
-    return (
-        pruned.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-    )
+    index = _cosine_index(_normalize(batch.raw), vec_col)
+    return _probe_topk(vectors, id_col, batch, index, k, "cosine")
 
 
 def cosine_pairs_udf():
@@ -241,20 +306,27 @@ def top_cosine_pairs_blocked(
     or fall back to the exact variant.
     """
     pruned = _lsh_blocked_pairs(
-        vectors,
-        dim,
-        n_tables=n_tables,
-        n_planes=n_planes,
-        id_col=id_col,
-        vec_col=vec_col,
-        per_bucket_top_n=top_n,
-        n_rows=n_rows,
+        vectors, dim, n_tables, n_planes, id_col, vec_col, per_bucket_top_n=top_n, n_rows=n_rows
     )
     # global cut: orderBy().limit() plans as TakeOrderedAndProject (parallel
     # partial top-N per partition + driver merge), never a 1-task window
     top = pruned.orderBy(F.desc("cosine"), "id_a", "id_b").limit(top_n)
     w = Window.orderBy(F.desc("cosine"), "id_a", "id_b")
     return top.withColumn("rank", F.row_number().over(w))
+
+
+def _hyperplanes(dim: int, n_planes: int, seed: int, n_tables: int = 1):
+    """Seeded random hyperplanes (dim, n_tables·n_planes) for ``n_tables``
+    LSH tables, and the packer from a margin matrix to (n, n_tables) int64
+    bucket ids (sign bit i of a table → 2^i)."""
+    planes = np.random.RandomState(seed).randn(dim, n_tables * n_planes)
+    pow2 = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64)).astype(np.float64)
+
+    def pack(margins: np.ndarray) -> np.ndarray:
+        signs = (margins > 0).reshape(len(margins), n_tables, n_planes)
+        return (signs @ pow2).astype(np.int64)
+
+    return planes, pack
 
 
 def _lsh_blocked_pairs(
@@ -295,15 +367,12 @@ def _lsh_blocked_pairs(
         if n_rows is None:
             n_rows = vectors.count()
         n_planes = min(30, max(2, int(np.ceil(np.log2(max(2.0, n_rows / 256.0))))))
-    rng = np.random.RandomState(seed)
-    planes = rng.randn(dim, n_tables * n_planes)
-    pow2 = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64)).astype(np.float64)
+    planes, pack = _hyperplanes(dim, n_planes, seed, n_tables)
 
     @pandas_udf(T.ArrayType(T.LongType()))
     def _buckets(vecs: pd.Series) -> pd.Series:
         mat = np.vstack(vecs.to_numpy()).astype(np.float64)
-        signs = (mat @ planes > 0).reshape(len(mat), n_tables, n_planes)
-        return pd.Series(list((signs @ pow2).astype(np.int64)))
+        return pd.Series(list(pack(mat @ planes)))
 
     v = vectors.select(
         F.col(id_col),
@@ -350,54 +419,38 @@ def _lsh_blocked_pairs(
 
 def hyperplane_bucket(vec: F.Column, dim: int, n_planes: int = 16, seed: int = 7) -> F.Column:
     """Random-hyperplane LSH bucket id (sign bits packed into an int)."""
-    rng = np.random.RandomState(seed)
-    planes = rng.randn(dim, n_planes)
-    pow2 = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64))
+    planes, pack = _hyperplanes(dim, n_planes, seed)
 
-    @pandas_udf(T.LongType())
+    @_key_udf(T.LongType())
     def _b(vecs: pd.Series) -> pd.Series:
         mat = np.vstack(vecs.to_numpy()).astype(np.float64)
-        signs = (mat @ planes) > 0
-        return pd.Series((signs @ pow2.astype(np.float64)).astype(np.int64))
+        return pd.Series(pack(mat @ planes)[:, 0])
 
     return _b(vec)
 
 
 def query_directed_probes(
-    vec: F.Column, dim: int, n_planes: int, n_probes: int, seed: int = 7
-) -> F.Column:
-    """ARRAY<LONG> of the ``n_probes`` most promising LSH buckets per query
+    mat: np.ndarray, n_planes: int, n_probes: int, seed: int = 7
+) -> np.ndarray:
+    """(n_queries, T) LSH buckets to probe per query row of ``mat``
     (multi-probe LSH, query-directed): the home bucket first, then sign-flip
     perturbations ranked by cost = sum of |hyperplane margins| flipped — a
     plane whose margin is near zero is the one a true neighbor most likely
     sits across. Candidate flips are all singles and pairs, so the ranked
-    pool is p + C(p,2); only the cheapest ``n_probes − 1`` are emitted.
-    Bounded fan-out at ANY n_planes (the r2 Hamming-ball probing exploded as
-    C(p,2) rows per query and was capped at 2 bits for that reason)."""
-    rng = np.random.RandomState(seed)  # SAME planes as hyperplane_bucket
-    planes = rng.randn(dim, n_planes)
-    pow2 = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64)).astype(np.float64)
+    pool is p + C(p,2); only the cheapest ``n_probes − 1`` are taken, so T =
+    min(n_probes, 1 + p + C(p,2)) distinct buckets at ANY n_planes. Planes
+    are ``hyperplane_bucket``'s for the same seed."""
+    planes, pack = _hyperplanes(mat.shape[1], n_planes, seed)
+    margins = np.asarray(mat, dtype=np.float64) @ planes  # (n, p) signed distances
+    home = pack(margins)  # (n, 1)
     iu, ju = np.triu_indices(n_planes, 1)
-    # flip masks for singles then pairs (int64 via float dot with pow2)
-    single_masks = (1 << np.arange(n_planes, dtype=np.int64))
-    pair_masks = single_masks[iu] | single_masks[ju]
-    all_masks = np.concatenate([single_masks, pair_masks])
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def _probes(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy()).astype(np.float64)
-        margins = mat @ planes  # (n, p) signed distances
-        home = ((margins > 0).astype(np.float64) @ pow2).astype(np.int64)
-        a = np.abs(margins)
-        costs = np.concatenate([a, a[:, iu] + a[:, ju]], axis=1)  # (n, p+C(p,2))
-        t = min(n_probes - 1, costs.shape[1])
-        top = np.argsort(costs, axis=1)[:, :t]  # cheapest flips first
-        out = []
-        for i in range(len(mat)):
-            out.append(np.concatenate([[home[i]], home[i] ^ all_masks[top[i]]]))
-        return pd.Series(out)
-
-    return _probes(vec)
+    # flip masks for singles then pairs
+    single = 1 << np.arange(n_planes, dtype=np.int64)
+    masks = np.concatenate([single, single[iu] | single[ju]])
+    a = np.abs(margins)
+    costs = np.concatenate([a, a[:, iu] + a[:, ju]], axis=1)  # (n, p+C(p,2))
+    flips = np.argsort(costs, axis=1)[:, : max(0, n_probes - 1)]  # cheapest first
+    return np.concatenate([home, home ^ masks[flips]], axis=1)
 
 
 def lsh_topk(
@@ -406,7 +459,6 @@ def lsh_topk(
     dim: int,
     k: int = 10,
     n_planes: int = 12,
-    probe_bits: int = 0,
     n_probes: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -414,53 +466,19 @@ def lsh_topk(
 ) -> DataFrame:
     """Approximate cosine top-k via shared LSH buckets (scale path).
 
-    Both sides get a bucket id; candidates = equi-join on bucket. Recall is
-    tuned by n_planes (fewer planes → bigger buckets → higher recall/cost)
-    plus one of two probing modes:
-
-    * ``n_probes=T`` (preferred, r3): query-directed multi-probe — each
-      query probes its home bucket plus the T−1 cheapest sign-flip
-      perturbations ranked by |margin| (see query_directed_probes). Probe
-      fan-out is exactly T per query at any n_planes.
-    * ``probe_bits`` (r2, kept for comparison): the full Hamming ball —
-      probe_bits=1 → n_planes+1 probes, =2 adds all C(n_planes, 2) two-flip
-      buckets; capped at 2, beyond which the fan-out exceeds simply using
-      fewer planes.
-
-    Vectors keep ONE bucket, so a (query, vector) candidate occurs at most
-    once and the big side never expands.
+    Vectors keep ONE bucket (``hyperplane_bucket``); each query probes its
+    home bucket plus, with ``n_probes=T``, the T−1 cheapest sign-flip
+    perturbations ranked by |margin| (``query_directed_probes``) — probe
+    fan-out is exactly T per query at any n_planes. Recall is tuned by
+    n_planes (fewer planes → bigger buckets → higher recall/cost) and T.
     """
-    from itertools import combinations
-
-    if probe_bits > 2:
-        raise ValueError("probe_bits > 2 unsupported: use n_probes= instead")
-    if n_probes is not None and probe_bits:
-        raise ValueError("set either n_probes or probe_bits, not both")
-    v = vectors.withColumn("bucket", hyperplane_bucket(F.col(vec_col), dim, n_planes))
-    if n_probes is not None and n_probes > 1:
-        q = queries.withColumn(
-            "bucket",
-            F.explode(query_directed_probes(F.col(vec_col), dim, n_planes, n_probes)),
-        )
-    else:
-        q = queries.withColumn("bucket", hyperplane_bucket(F.col(vec_col), dim, n_planes))
-    if probe_bits >= 1:  # mutually exclusive with n_probes (guard above)
-        masks = [0] + [1 << i for i in range(n_planes)]
-        if probe_bits >= 2:
-            masks += [
-                (1 << i) | (1 << j) for i, j in combinations(range(n_planes), 2)
-            ]
-        probes = F.array(*[F.col("bucket").bitwiseXOR(F.lit(mk)) for mk in masks])
-        q = q.withColumn("bucket", F.explode(probes))
-
-    cosine = cosine_pairs_udf()  # shared helper (r4: was a verbatim copy)
-    cand = F.broadcast(
-        q.select(F.col(query_id_col), F.col("bucket"), F.col(vec_col).alias("_qv"))
-    ).join(v.select(id_col, "bucket", vec_col), "bucket")
-    scored = cand.withColumn("cosine", cosine(F.col("_qv"), F.col(vec_col)))
-    return _two_stage_topk(scored, k, query_id_col, id_col).select(
-        query_id_col, "rank", id_col, F.round("cosine", 6).alias("cosine")
+    q = _collect_query_batch(queries, query_id_col, vec_col)
+    index = _cosine_index(
+        _normalize(q.raw), vec_col, key="bucket",
+        probes=query_directed_probes(q.raw, n_planes, n_probes or 1),
     )
+    stored = vectors.withColumn("bucket", hyperplane_bucket(F.col(vec_col), dim, n_planes))
+    return _probe_topk(stored, id_col, q, index, k, "cosine")
 
 
 def _deterministic_sample(
@@ -472,6 +490,21 @@ def _deterministic_sample(
     limit plans as TakeOrderedAndProject — parallel per-partition partial
     top-k merged on the driver, never a full sort."""
     return vectors.select(id_col, vec_col).orderBy(id_col).limit(sample).select(vec_col).collect()
+
+
+def _spherical_kmeans(mat: np.ndarray, init: np.ndarray, iters: int) -> np.ndarray:
+    """Fixed-iteration spherical k-means: assign each unit row of ``mat`` to
+    its max-cosine center, move non-empty centers to their members' mean,
+    renormalize. ``init`` is updated in place."""
+    cents = init
+    for _ in range(iters):
+        assign = (mat @ cents.T).argmax(axis=1)
+        for c in range(len(cents)):
+            members = mat[assign == c]
+            if len(members):
+                cents[c] = members.mean(axis=0)
+        cents = _normalize(cents)
+    return cents
 
 
 def train_ivf_centroids(
@@ -498,32 +531,26 @@ def train_ivf_centroids(
     )
     mat = _normalize(np.array([list(r[0]) for r in rows], dtype=np.float64))
     rng = np.random.RandomState(seed)
-    cents = mat[rng.choice(len(mat), size=min(n_centroids, len(mat)), replace=False)]
-    for _ in range(iters):
-        sims = mat @ cents.T
-        assign = sims.argmax(axis=1)
-        for c in range(len(cents)):
-            members = mat[assign == c]
-            if len(members):
-                cents[c] = members.mean(axis=0)
-        cents = _normalize(cents)
-    return cents
+    init = mat[rng.choice(len(mat), size=min(n_centroids, len(mat)), replace=False)]
+    return _spherical_kmeans(mat, init, iters)
 
 
-def ivf_assign(vec: F.Column, centroids: np.ndarray, nprobe: int = 1) -> F.Column:
-    """ARRAY<INT> of the ``nprobe`` nearest centroid ids (vectorized)."""
-    cents = centroids
+def _nearest_lists(mat: np.ndarray, cents: np.ndarray, n: int) -> np.ndarray:
+    """(rows, n) ids of the ``n`` max-cosine centers of unit rows ``mat``.
+    kind="stable": on tied similarities the LOWER center index wins,
+    matching argmax (r3 review: default introsort is unstable, so a tied
+    vector could be stored in one list but residual-encoded / probed
+    against another)."""
+    return np.argsort(-(mat @ cents.T), axis=1, kind="stable")[:, :n]
 
-    @pandas_udf(T.ArrayType(T.IntegerType()))
+
+def ivf_assign(vec: F.Column, centroids: np.ndarray) -> F.Column:
+    """INT id of the nearest centroid (vectorized; the stored-side IVF key)."""
+
+    @_key_udf(T.IntegerType())
     def _a(vecs: pd.Series) -> pd.Series:
         mat = _normalize(np.vstack(vecs.to_numpy()))
-        sims = mat @ cents.T
-        # kind="stable": on tied similarities the LOWER centroid index wins,
-        # matching argmax (r3 review: default introsort is unstable, so a
-        # tied vector could be stored in one list but residual-encoded /
-        # probed against another)
-        top = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe].astype(np.int32)
-        return pd.Series(list(top))
+        return pd.Series(_nearest_lists(mat, centroids, 1)[:, 0].astype(np.int32))
 
     return _a(vec)
 
@@ -544,23 +571,14 @@ def ivf_topk(
     Scale shape: vectors are assigned to exactly 1 list (a one-pass narrow
     stage, persistable as a partition layout); queries probe their nprobe
     nearest lists, so each query scores ~nprobe/n_centroids of the corpus.
-    The join key is the int centroid id — an 8-byte shuffle key, and the
-    probe side is broadcast. Recall/cost is tuned by (n_centroids, nprobe).
+    Recall/cost is tuned by (n_centroids, nprobe).
     """
     cents = train_ivf_centroids(vectors, dim, n_centroids, vec_col=vec_col, id_col=id_col)
-    v = vectors.withColumn(
-        "ivf_list", F.element_at(ivf_assign(F.col(vec_col), cents, 1), 1)
-    )
-    q = queries.withColumn("ivf_list", F.explode(ivf_assign(F.col(vec_col), cents, nprobe)))
-
-    cosine = cosine_pairs_udf()
-    cand = F.broadcast(
-        q.select(query_id_col, "ivf_list", F.col(vec_col).alias("_qv"))
-    ).join(v.select(id_col, "ivf_list", vec_col), "ivf_list")
-    scored = cand.withColumn("cosine", cosine(F.col("_qv"), F.col(vec_col)))
-    return _two_stage_topk(scored, k, query_id_col, id_col).select(
-        query_id_col, "rank", id_col, F.round("cosine", 6).alias("cosine")
-    )
+    q = _collect_query_batch(queries, query_id_col, vec_col)
+    qmat = _normalize(q.raw)
+    index = _cosine_index(qmat, vec_col, key="ivf_list", probes=_nearest_lists(qmat, cents, nprobe))
+    stored = vectors.withColumn("ivf_list", ivf_assign(F.col(vec_col), cents))
+    return _probe_topk(stored, id_col, q, index, k, "cosine")
 
 
 def train_ivf2_centroids(
@@ -581,14 +599,8 @@ def train_ivf2_centroids(
     rows = _deterministic_sample(vectors, vec_col, id_col, sample)
     mat = _normalize(np.array([list(r[0]) for r in rows], dtype=np.float64))
     rng = np.random.RandomState(seed)
-    coarse = mat[rng.choice(len(mat), size=min(n_coarse, len(mat)), replace=False)]
-    for _ in range(iters):
-        assign = (mat @ coarse.T).argmax(axis=1)
-        for c in range(len(coarse)):
-            members = mat[assign == c]
-            if len(members):
-                coarse[c] = members.mean(axis=0)
-        coarse = _normalize(coarse)
+    init = mat[rng.choice(len(mat), size=min(n_coarse, len(mat)), replace=False)]
+    coarse = _spherical_kmeans(mat, init, iters)
     assign = (mat @ coarse.T).argmax(axis=1)
     fine = np.zeros((len(coarse), n_fine, dim))
     for c in range(len(coarse)):
@@ -599,14 +611,7 @@ def train_ivf2_centroids(
         fc = members[sel]
         if len(fc) < n_fine:  # pad by repeating (stable ids)
             fc = np.vstack([fc] * (n_fine // len(fc) + 1))[:n_fine]
-        for _ in range(iters):
-            fa = (members @ fc.T).argmax(axis=1)
-            for f in range(n_fine):
-                m = members[fa == f]
-                if len(m):
-                    fc[f] = m.mean(axis=0)
-            fc = _normalize(fc)
-        fine[c] = fc
+        fine[c] = _spherical_kmeans(members, fc, iters)
     return coarse, fine
 
 
@@ -628,50 +633,32 @@ def ivf2_topk(
     (coarse·n_fine + fine); queries probe nprobe_coarse coarse cells ×
     nprobe_fine fine cells each, so a query scores ~(nprobe_c·nprobe_f)/
     (n_coarse·n_fine) of the corpus — a quadratically finer partition than
-    one level at the same codebook-train cost shape. Join key stays a single
-    int; probe side broadcast."""
+    one level at the same codebook-train cost shape. Every vector lives in
+    exactly one flat list, so a (query, vector) pair is scored at most once."""
     coarse, fine = train_ivf2_centroids(
         vectors, dim, n_coarse, n_fine, vec_col=vec_col, id_col=id_col
     )
+    nf = fine.shape[1]
 
-    @pandas_udf(T.IntegerType())
+    @_key_udf(T.IntegerType())
     def _assign1(vecs: pd.Series) -> pd.Series:
         mat = _normalize(np.vstack(vecs.to_numpy()))
         c = (mat @ coarse.T).argmax(axis=1)
         # fine argmax within the assigned coarse cell only
-        sims = np.einsum("nd,nfd->nf", mat, fine[c])
-        f = sims.argmax(axis=1)
-        return pd.Series((c * fine.shape[1] + f).astype(np.int32))
+        f = np.einsum("nd,nfd->nf", mat, fine[c]).argmax(axis=1)
+        return pd.Series((c * nf + f).astype(np.int32))
 
-    nf = fine.shape[1]
-
-    @pandas_udf(T.ArrayType(T.IntegerType()))
-    def _probe(vecs: pd.Series) -> pd.Series:
-        mat = _normalize(np.vstack(vecs.to_numpy()))
-        # stable argsorts: tie-breaking matches _assign1's argmax (lowest
-        # index wins), so a vector in a tied list is always probed
-        ctop = np.argsort(-(mat @ coarse.T), axis=1, kind="stable")[:, :nprobe_coarse]
-        out = []
-        for i in range(len(mat)):
-            lists = []
-            for c in ctop[i]:
-                fs = np.argsort(-(fine[c] @ mat[i]), kind="stable")[:nprobe_fine]
-                lists.extend(int(c) * nf + int(f) for f in fs)
-            out.append(np.array(lists, dtype=np.int32))
-        return pd.Series(out)
-
-    v = vectors.withColumn("ivf_list", _assign1(F.col(vec_col)))
-    q = queries.withColumn("ivf_list", F.explode(_probe(F.col(vec_col))))
-    cosine = cosine_pairs_udf()
-    cand = F.broadcast(
-        q.select(query_id_col, "ivf_list", F.col(vec_col).alias("_qv"))
-    ).join(v.select(id_col, "ivf_list", vec_col), "ivf_list")
-    scored = cand.withColumn("cosine", cosine(F.col("_qv"), F.col(vec_col)))
-    # no dedupe needed: every vector lives in exactly one flat list, so a
-    # (query, vector) candidate pair occurs at most once across probes
-    return _two_stage_topk(scored, k, query_id_col, id_col).select(
-        query_id_col, "rank", id_col, F.round("cosine", 6).alias("cosine")
-    )
+    q = _collect_query_batch(queries, query_id_col, vec_col)
+    qmat = _normalize(q.raw)
+    # stable argsorts: tie-breaking matches _assign1's argmax (lowest index
+    # wins), so a vector in a tied list is always probed
+    ctop = _nearest_lists(qmat, coarse, nprobe_coarse)  # (nq, pc)
+    ftop = np.argsort(-np.einsum("qd,cfd->qcf", qmat, fine), axis=2, kind="stable")
+    ftop = np.take_along_axis(ftop, ctop[:, :, None], axis=1)[:, :, :nprobe_fine]
+    probes = (ctop[:, :, None] * nf + ftop).reshape(len(qmat), -1)
+    index = _cosine_index(qmat, vec_col, key="ivf_list", probes=probes)
+    stored = vectors.withColumn("ivf_list", _assign1(F.col(vec_col)))
+    return _probe_topk(stored, id_col, q, index, k, "cosine")
 
 
 def dupes_plane_count(
@@ -741,15 +728,28 @@ def embedding_dupes(
             threshold, n_tables, recall_target,
         )
     return _lsh_blocked_pairs(
-        vectors,
-        dim,
-        n_tables=n_tables,
-        n_planes=n_planes,
-        id_col=id_col,
-        vec_col=vec_col,
-        threshold=threshold,
-        bucket_cap=bucket_cap,
+        vectors, dim, n_tables, n_planes, id_col, vec_col, threshold=threshold, bucket_cap=bucket_cap
     )
+
+
+def _nearest_codeword(part: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """argmin_c |x − c|² per row, as |x|² − 2x·c + |c|²: one BLAS matmul
+    instead of a (rows, k, sub) broadcast temp."""
+    d2 = (
+        (part**2).sum(axis=1, keepdims=True)
+        - 2.0 * part @ cents.T
+        + (cents**2).sum(axis=1)[None, :]
+    )
+    return d2.argmin(axis=1)
+
+
+def _pq_codes(mat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """(rows, m) int16 PQ codes of ``mat`` against (m, k, sub) ``books``."""
+    sub = books.shape[2]
+    return np.stack(
+        [_nearest_codeword(mat[:, j * sub : (j + 1) * sub], b) for j, b in enumerate(books)],
+        axis=1,
+    ).astype(np.int16)
 
 
 def train_pq_codebooks(
@@ -775,7 +775,7 @@ def train_pq_codebooks(
     ``centroids``: train on RESIDUALS v − c(v) against these IVF centroids
     (classic IVFADC) — residuals have far smaller spread than raw vectors,
     so the same byte budget quantizes much finer. Encode/score must then use
-    the same centroids (pq_encode/ivfpq_topk keep the contract)."""
+    the same centroids (ivfpq_encode/ivfpq_topk keep the contract)."""
     if dim % m != 0:
         # ValueError, not assert (r5 review): under python -O the assert
         # vanishes and the tail dims are silently DROPPED from training,
@@ -794,13 +794,8 @@ def train_pq_codebooks(
         part = mat[:, j * sub : (j + 1) * sub]
         kk = min(k, len(part))
         cents = part[rng.choice(len(part), size=kk, replace=False)]
-        pn = (part**2).sum(axis=1, keepdims=True)
         for _ in range(iters):
-            # |x−c|² = |x|² − 2x·c + |c|²: one BLAS matmul instead of a
-            # (sample, k, sub) broadcast temp per iteration (same argmin —
-            # pq_encode already scores with this expansion)
-            d2 = pn - 2.0 * part @ cents.T + (cents**2).sum(axis=1)[None, :]
-            assign = d2.argmin(axis=1)
+            assign = _nearest_codeword(part, cents)
             for c in range(kk):
                 members = part[assign == c]
                 if len(members):
@@ -811,29 +806,14 @@ def train_pq_codebooks(
     return books
 
 
-def pq_encode(
-    vec: F.Column, books: np.ndarray, centroids: np.ndarray | None = None
-) -> F.Column:
-    """ARRAY<SHORT> of per-subspace code ids (m entries, each < 256).
-    With ``centroids``, codes quantize the residual v − c(v) (IVFADC) —
-    must match how ``books`` were trained."""
-    m, k, sub = books.shape
+def pq_encode(vec: F.Column, books: np.ndarray) -> F.Column:
+    """ARRAY<SHORT> of per-subspace code ids (m entries, each < 256) of the
+    normalized vector. Residual (IVFADC) codes come from ``ivfpq_encode``,
+    which assigns the list and encodes in one pass."""
 
     @pandas_udf(T.ArrayType(T.ShortType()))
     def _enc(vecs: pd.Series) -> pd.Series:
-        mat = _normalize(np.vstack(vecs.to_numpy()))
-        if centroids is not None:
-            mat = mat - centroids[(mat @ centroids.T).argmax(axis=1)]
-        out = np.zeros((len(mat), m), dtype=np.int16)
-        for j in range(m):
-            part = mat[:, j * sub : (j + 1) * sub]
-            d2 = (
-                (part**2).sum(axis=1, keepdims=True)
-                - 2.0 * part @ books[j].T
-                + (books[j] ** 2).sum(axis=1)[None, :]
-            )
-            out[:, j] = d2.argmin(axis=1).astype(np.int16)
-        return pd.Series(list(out))
+        return pd.Series(list(_pq_codes(_normalize(np.vstack(vecs.to_numpy())), books)))
 
     return _enc(vec)
 
@@ -858,46 +838,42 @@ def ivfpq_encode(
     crossings) — here the assignment is computed once and reused for both
     the list id and the residual subtraction, which also removes any risk
     of the two call sites' tie rules drifting apart (argmax == first-index
-    ties, the same rule ivf_assign's stable argsort encodes)."""
-    from typing import Iterator as _It
-
-    m, k, sub = books.shape
-    cents = centroids
-    id_type = vectors.schema[id_col].dataType
+    ties, the same rule _nearest_lists' stable argsort encodes)."""
     schema = T.StructType(
         [
-            T.StructField(id_col, id_type),
+            T.StructField(id_col, vectors.schema[id_col].dataType),
             T.StructField("ivf_list", T.IntegerType()),
             T.StructField("pq", T.ArrayType(T.ShortType())),
         ]
     )
 
-    def _enc(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
+    def _enc(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             mat = _normalize(np.vstack(pdf[vec_col].to_numpy()))
-            assign = np.argmax(mat @ cents.T, axis=1)  # first index on ties
+            assign = np.argmax(mat @ centroids.T, axis=1)  # first index on ties
             if residual:
-                mat = mat - cents[assign]
-            codes = np.zeros((len(mat), m), dtype=np.int16)
-            for j in range(m):
-                part = mat[:, j * sub : (j + 1) * sub]
-                d2 = (
-                    (part**2).sum(axis=1, keepdims=True)
-                    - 2.0 * part @ books[j].T
-                    + (books[j] ** 2).sum(axis=1)[None, :]
-                )
-                codes[:, j] = d2.argmin(axis=1).astype(np.int16)
+                mat = mat - centroids[assign]
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col],
                     "ivf_list": assign.astype(np.int32),
-                    "pq": list(codes),
+                    "pq": list(_pq_codes(mat, books)),
                 }
             )
 
     return vectors.select(id_col, vec_col).mapInPandas(_enc, schema)
+
+
+def _adc_lut(qmat: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """LUT[q, j, c] = ⟨q_subvector_j, codeword_jc⟩ — the (n_q, m, k) ADC
+    table (cosine via normalized q and the codeword reconstruction of the
+    normalized data vector). Shapes come from the CODEBOOKS (r5 review: a
+    persisted index trained with a different m must not reshape by the m
+    parameter)."""
+    m, _, sub = books.shape
+    return np.einsum("qjs,jcs->qjc", qmat.reshape(len(qmat), m, sub), books)
 
 
 def ivfpq_topk(
@@ -915,7 +891,7 @@ def ivfpq_topk(
     centroids: np.ndarray | None = None,
     books: np.ndarray | None = None,
     residual: bool = True,
-    max_queries: int = 10_000,
+    max_queries: int = MAX_QUERIES,
 ) -> DataFrame:
     """IVF-PQ: inverted-list pruning × product-quantized ADC scoring — the
     composition VERDICT r2 #4 asked for, and the actual 10⁹-vector serving
@@ -927,23 +903,19 @@ def ivfpq_topk(
     ``residual=True`` is classic IVFADC: codes quantize v − c(v) (the
     residual spread is far smaller than raw vectors, so the same m bytes
     quantize much finer) and the score decomposes exactly as
-    ⟨q, c_list⟩ + Σ_j LUT[q, j, code_j] — the ⟨q, c_list⟩ constant rides
-    the broadcast probe table as a column, costing nothing at scan time.
-    Recall improvement pinned by
+    ⟨q, c_list⟩ + Σ_j LUT[q, j, code_j] — the ⟨q, c_list⟩ constant is a
+    driver-side (n_q, n_centroids) matrix in the kernel closure, costing
+    nothing at scan time. Recall improvement pinned by
     tests/test_training_ops.py::test_ivfpq_residual_beats_raw.
 
     The probed-list set is a driver-side literal, so the ``isin`` filter on
     ``ivf_list`` is a pushable predicate: over a parquet/Iceberg layout
     partitioned by ivf_list it prunes at file-listing time (pinned by
-    tests/test_training_ops.py::test_ivfpq_scan_prunes_lists). Candidates
-    then shrink further to each query's own lists via the broadcast probe
-    join. Per-batch partial top-k (monoid) keeps the final window to
-    ≤ batches·|q|·k rows. Pass ``encoded``/``centroids``/``books`` to reuse
-    a persisted index (resume path); by default they are trained and encoded
-    in-line (deterministic: seeded, id-ordered samples).
+    tests/test_training_ops.py::test_ivfpq_scan_prunes_lists). Pass
+    ``encoded``/``centroids``/``books`` to reuse a persisted index (resume
+    path); by default they are trained and encoded in-line (deterministic:
+    seeded, id-ordered samples).
     """
-    from typing import Iterator as _It
-
     shared_sample = None
     if centroids is None or books is None:
         # ONE sample collection feeds both trainers (they used to run the
@@ -967,106 +939,17 @@ def ivfpq_topk(
             vectors, centroids, books, id_col=id_col, vec_col=vec_col,
             residual=residual,
         )
-    # derive the ADC shape from the CODEBOOKS, not the m parameter (r5
-    # review: a persisted index trained with a different m plus the default
-    # m=8 raised a confusing reshape error on the resume path — books is
-    # authoritative whenever provided)
-    m = books.shape[0]
-    sub = books.shape[2]
-
-    # query ids keep their INPUT dtype and column name end-to-end (ADVICE r3:
-    # the old path forced int64 ids and a hardcoded 'query_id' output column,
-    # crashing on string ids and silently renaming non-default columns,
-    # unlike lsh_topk/ivf_topk)
-    qid_type = queries.schema[query_id_col].dataType
-    qrows = _collect_query_batch(queries, query_id_col, vec_col, max_queries)
-    qvals = [r[0] for r in qrows]
-    qmat = _normalize(np.array([list(r[1]) for r in qrows], dtype=np.float64))
-    lut = np.einsum("qjs,jcs->qjc", qmat.reshape(len(qmat), m, sub), books)
-    # kind="stable" argsort of -sims: ties prefer the LOWER centroid index,
-    # exactly like ivf_assign's storage assignment and the argmax used for
-    # residual encoding — a vector in a tied list is never probed-around by
-    # its own query, and codes always quantize against the stored list's
-    # centroid (r3 review: plain argsort/[::-1] are both tie-unsafe)
-    qsims = qmat @ centroids.T
-    qprobe = np.argsort(-qsims, axis=1, kind="stable")[:, :nprobe]
-
-    spark = vectors.sparkSession
-    probe_rows = [
-        # qc = <q, c_list>: the residual score's constant term (0.0 when
-        # scoring raw codes — the LUT then carries the whole score)
-        (
-            qvals[qi],
-            int(lst),
-            float(qsims[qi, lst]) if residual else 0.0,
-        )
-        for qi in range(len(qvals))
-        for lst in qprobe[qi]
-    ]
-    probe_schema = T.StructType(
-        [
-            T.StructField(query_id_col, qid_type),
-            T.StructField("ivf_list", T.IntegerType()),
-            T.StructField("qc", T.DoubleType()),
-        ]
+    q = _collect_query_batch(queries, query_id_col, vec_col, max_queries)
+    qmat = _normalize(q.raw)
+    # stable probe order: ties prefer the LOWER centroid index, exactly like
+    # the argmax used for storage assignment and residual encoding
+    index = _adc_index(
+        _adc_lut(qmat, books),
+        qc=qmat @ centroids.T if residual else None,
+        key="ivf_list",
+        probes=_nearest_lists(qmat, centroids, nprobe),
     )
-    probe = spark.createDataFrame(probe_rows, probe_schema)
-    probed_lists = sorted({lst for _, lst, _ in probe_rows})
-
-    cand = F.broadcast(probe).join(
-        # literal isin BEFORE the join: prunes list-partitioned storage at
-        # file-listing time (the join alone would only filter post-scan)
-        encoded.filter(F.col("ivf_list").isin(probed_lists)),
-        "ivf_list",
-    )
-
-    qidx = {q: i for i, q in enumerate(qvals)}
-    part_schema = T.StructType(
-        [
-            T.StructField(query_id_col, qid_type),
-            T.StructField(id_col, vectors.schema[id_col].dataType),
-            T.StructField("pq_score", T.DoubleType()),
-        ]
-    )
-
-    def _adc_probe_topk(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        j_idx = np.arange(m)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            codes = np.vstack(pdf["pq"].to_numpy()).astype(np.int64)  # (rows, m)
-            qi = pdf[query_id_col].map(qidx).to_numpy()
-            # unrounded for ordering (r5 review; see pq_topk) — rounded
-            # once on the final emit
-            scores = (
-                pdf["qc"].to_numpy()
-                + lut[qi[:, None], j_idx[None, :], codes].sum(axis=1)
-            )
-            ids = pdf[id_col].to_numpy()
-            qs = pdf[query_id_col].to_numpy()
-            out = {query_id_col: [], id_col: [], "pq_score": []}
-            for q in pd.unique(qs):
-                sel = qs == q
-                order = np.lexsort((ids[sel], -scores[sel]))[:k]
-                out[query_id_col].extend([q] * len(order))
-                out[id_col].extend(ids[sel][order].tolist())
-                out["pq_score"].extend(scores[sel][order].tolist())
-            yield pd.DataFrame(out)
-
-    scored = cand.select(query_id_col, id_col, "pq", "qc").mapInPandas(
-        _adc_probe_topk, part_schema
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("pq_score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col, "rank", id_col,
-            F.round("pq_score", 6).alias("pq_score"),
-        )
-    )
+    return _probe_topk(encoded, id_col, q, index, k, "pq_score")
 
 
 def pq_topk(
@@ -1078,7 +961,7 @@ def pq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    max_queries: int = 10_000,
+    max_queries: int = MAX_QUERIES,
 ) -> DataFrame:
     """Approximate cosine top-k over PQ-compressed vectors (asymmetric
     distance computation): each query builds an (m, 256) inner-product
@@ -1087,61 +970,6 @@ def pq_topk(
     time. The scan side carries only the m-byte codes: at 10^9+ vectors
     this is the shape that fits an embedding table in cluster memory."""
     books = train_pq_codebooks(vectors, dim, m=m, vec_col=vec_col, id_col=id_col)
-    sub = books.shape[2]
     enc = vectors.select(id_col, pq_encode(F.col(vec_col), books).alias("pq"))
-
-    qid_type = queries.schema[query_id_col].dataType
-    qrows = _collect_query_batch(queries, query_id_col, vec_col, max_queries)
-    qvals = [r[0] for r in qrows]
-    qmat = _normalize(np.array([list(r[1]) for r in qrows], dtype=np.float64))
-    # LUT[q, j, c] = <q_subvector_j, codeword_jc>  (cosine via normalized q
-    # and codeword reconstruction of the normalized data vector)
-    lut = np.einsum("qjs,jcs->qjc", qmat.reshape(len(qmat), m, sub), books)
-
-    # partial top-k per Arrow batch (top-k is a monoid: per-batch top-k then
-    # global top-k == global top-k). The shuffle into the final per-query
-    # window therefore carries ≤ batches·|queries|·k rows instead of
-    # |vectors|·|queries| — the difference between a merge and a full-table
-    # shuffle at 10⁹ vectors.
-    from typing import Iterator as _It
-
-    part_schema = T.StructType(
-        [
-            T.StructField(query_id_col, qid_type),
-            T.StructField(id_col, vectors.schema[id_col].dataType),
-            T.StructField("pq_score", T.DoubleType()),
-        ]
-    )
-
-    def _adc_partial_topk(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
-        j_idx = np.arange(m)[None, :]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cc = np.vstack(pdf["pq"].to_numpy()).astype(np.int64)  # (batch, m)
-            ids = pdf[id_col].to_numpy()
-            # UNROUNDED scores for ordering (r5 review: ranking on 6dp-
-            # rounded values diverges from the oracle's unrounded ORDER BY
-            # whenever two cosines tie at 6dp — same contract note as
-            # brute_force_topk); rounding happens once on the final emit
-            scores = lut[:, j_idx, cc].sum(axis=2)  # (n_q, batch)
-            out = {query_id_col: [], id_col: [], "pq_score": []}
-            for qi in range(len(qvals)):
-                order = np.lexsort((ids, -scores[qi]))[:k]
-                out[query_id_col].extend([qvals[qi]] * len(order))
-                out[id_col].extend(ids[order].tolist())
-                out["pq_score"].extend(scores[qi][order].tolist())
-            yield pd.DataFrame(out)
-
-    scored = enc.mapInPandas(_adc_partial_topk, part_schema)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("pq_score").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            query_id_col, "rank", id_col,
-            F.round("pq_score", 6).alias("pq_score"),
-        )
-    )
+    q = _collect_query_batch(queries, query_id_col, vec_col, max_queries)
+    return _probe_topk(enc, id_col, q, _adc_index(_adc_lut(_normalize(q.raw), books)), k, "pq_score")

@@ -124,6 +124,46 @@ def test_ivf_topk_recall(spark):
     assert len(ids & {0, 1, 2, 3, 4}) >= 4  # planted dups share the query's list
 
 
+# Each approximate ANN path at its exhaustive or lossless configuration (the
+# q32/q36/q48/q50/q52 recipes): every key probed, and corpus <= codewords for
+# PQ so each subvector is its own codeword. All must then equal brute force
+# (itself checked against numpy by test_ann_brute_vs_numpy).
+_EXACT_ANN_CONFIGS = {
+    "lsh_topk": {"n_planes": 2, "n_probes": 4},
+    "ivf_topk": {"n_centroids": 8, "nprobe": 8},
+    "ivf2_topk": {"n_coarse": 4, "n_fine": 2, "nprobe_coarse": 4, "nprobe_fine": 2},
+    "pq_topk": {"m": 4},
+    "ivfpq_topk": {"m": 4, "n_centroids": 8, "nprobe": 8},
+}
+
+
+@pytest.mark.parametrize("name", list(_EXACT_ANN_CONFIGS))
+def test_ann_paths_exact_config_equal_brute_force(spark, name):
+    from cog3pio_spark.operators import ann
+
+    rng = np.random.RandomState(97)
+    mat = rng.randn(150, 16)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in mat[i]]) for i in range(150)], ["vec_id", "embedding"]
+    )
+    qids = [4, 40, 111]
+    key = lambda r: (r["query_id"], r["rank"], r["vec_id"])  # noqa: E731
+    want = sorted(
+        brute_force_topk(df, [(i, list(mat[i])) for i in qids], k=7).collect(), key=key
+    )
+    qdf = df.filter(F.col("vec_id").isin(qids)).withColumnRenamed("vec_id", "query_id")
+    out = getattr(ann, name)(df, qdf, dim=16, k=7, **_EXACT_ANN_CONFIGS[name])
+    got = sorted(out.collect(), key=key)
+    assert [key(r) for r in got] == [key(r) for r in want]
+    # one shared core: no (query, vector) pair join, and the stored-side
+    # key UDF (if any) runs once, not again under the probe filter
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "Join" not in final and final.count("ArrowEvalPython") <= 1, final
+    score = "pq_score" if name in ("pq_topk", "ivfpq_topk") else "cosine"
+    assert all(abs(g[score] - w["cosine"]) <= 1e-6 + 1e-12 for g, w in zip(got, want))
+
+
 def test_doc_table_roundtrip(spark, tmp_path):
     from cog3pio_spark.sources.doc_table import read_doc_table, write_doc_table
 
@@ -213,6 +253,21 @@ def test_curate_refuses_clobbering_caller_columns(spark):
         "doc_id long, text string, quality double",
     )
     with _pytest.raises(ValueError, match="quality"):
+        curate(docs)
+
+
+@pytest.mark.parametrize("col", ["lang_pred", "n_tokens", "fp"])
+def test_curate_refuses_each_working_column(spark, col):
+    """Every working column curate() adds is refused on input, not only
+    'quality' (test above): the reserved set is derived from the columns
+    curate() computes, so it cannot drift from them."""
+    from cog3pio_spark.plans.curation import curate
+
+    docs = spark.createDataFrame(
+        [(1, "some acceptable quality text here", "x")],
+        f"doc_id long, text string, {col} string",
+    )
+    with pytest.raises(ValueError, match=rf"already has \['{col}'\]"):
         curate(docs)
 
 
@@ -416,8 +471,9 @@ def test_ivf2_topk_recall(spark):
 
 
 def test_lsh_multiprobe_improves_recall(spark):
-    """probe_bits=1 recall ⊇ single-bucket recall on planted near-dups, and
-    the single-bucket path (probe_bits=0) is unchanged."""
+    """Query-directed multi-probe (n_probes=11, the fan-out of the full
+    Hamming-1 ball at 10 planes) recall ⊇ single-bucket recall on planted
+    near-dups."""
     rng = np.random.RandomState(41)
     mat = rng.randn(400, 16)
     qv = rng.randn(16)
@@ -430,7 +486,7 @@ def test_lsh_multiprobe_improves_recall(spark):
     base = {r["vec_id"] for r in lsh_topk(df, qdf, dim=16, k=8, n_planes=10).collect()}
     multi = {
         r["vec_id"]
-        for r in lsh_topk(df, qdf, dim=16, k=8, n_planes=10, probe_bits=1).collect()
+        for r in lsh_topk(df, qdf, dim=16, k=8, n_planes=10, n_probes=11).collect()
     }
     planted = set(range(8))
     assert len(multi & planted) >= len(base & planted)
@@ -438,12 +494,12 @@ def test_lsh_multiprobe_improves_recall(spark):
 
 
 def test_lsh_query_directed_probes_bounded_and_effective(spark):
-    """r3 multi-probe upgrade: query-directed probing (n_probes=T, flips
-    ranked by |margin|) must (a) emit exactly T probes per query at any
-    n_planes — the Hamming-ball mode explodes as C(p,2) — and (b) recover
-    at least as many planted near-dups as the full Hamming-1 ball while
-    probing FEWER buckets."""
-    from cog3pio_spark.operators.ann import lsh_topk, query_directed_probes
+    """r3 multi-probe: query-directed probing (n_probes=T, flips ranked by
+    |margin|) must (a) emit exactly T distinct probes per query at any
+    n_planes, the first being the query's own bucket as hyperplane_bucket
+    assigns it on the stored side, and (b) recover most planted near-dups
+    with only 6 probes."""
+    from cog3pio_spark.operators.ann import hyperplane_bucket, lsh_topk, query_directed_probes
 
     rng = np.random.RandomState(43)
     mat = rng.randn(400, 16)
@@ -455,21 +511,16 @@ def test_lsh_query_directed_probes_bounded_and_effective(spark):
     )
     qdf = spark.createDataFrame([(5, [float(x) for x in qv])], ["query_id", "embedding"])
 
-    probes = qdf.select(
-        query_directed_probes(F.col("embedding"), 16, 10, 6).alias("p")
-    ).collect()[0]["p"]
+    probes = query_directed_probes(np.array([qv]), 10, 6)[0]
     assert len(probes) == 6 and len(set(probes)) == 6  # bounded, distinct
+    home = qdf.select(hyperplane_bucket(F.col("embedding"), 16, 10).alias("b")).first()["b"]
+    assert probes[0] == home
 
     planted = set(range(8))
-    ham1 = {  # full Hamming-1 ball: 11 probes/query
-        r["vec_id"]
-        for r in lsh_topk(df, qdf, dim=16, k=8, n_planes=10, probe_bits=1).collect()
-    }
-    directed = {  # 6 directed probes/query — nearly half the fan-out
+    directed = {
         r["vec_id"]
         for r in lsh_topk(df, qdf, dim=16, k=8, n_planes=10, n_probes=6).collect()
     }
-    assert len(directed & planted) >= len(ham1 & planted)
     assert len(directed & planted) >= 6
 
 
@@ -781,10 +832,10 @@ def test_pq_query_guard_raises_before_collect(spark):
 
 
 def test_pq_ivfpq_string_query_ids_and_column_name(spark):
-    """ADVICE r3: pq_topk/ivfpq_topk must preserve the query-id DTYPE
-    (string ids used to crash on np.int64 coercion) and the caller's
-    query_id_col NAME in the output schema, matching lsh_topk/ivf_topk."""
-    from cog3pio_spark.operators.ann import ivfpq_topk, pq_topk
+    """ADVICE r3: every collected-query top-k path must preserve the
+    query-id DTYPE (string ids used to crash on np.int64 coercion) and the
+    caller's query_id_col NAME in the output schema."""
+    from cog3pio_spark.operators.ann import ivf2_topk, ivf_topk, ivfpq_topk, pq_topk
 
     rng = np.random.RandomState(11)
     mat = rng.randn(60, 8)
@@ -796,10 +847,13 @@ def test_pq_ivfpq_string_query_ids_and_column_name(spark):
         ["qname", "embedding"],
     )
     for op, kw in (
-        (pq_topk, {}),
-        (ivfpq_topk, {"n_centroids": 4, "nprobe": 4}),
+        (pq_topk, {"m": 4}),
+        (ivfpq_topk, {"m": 4, "n_centroids": 4, "nprobe": 4}),
+        (lsh_topk, {"n_planes": 4, "n_probes": 3}),
+        (ivf_topk, {"n_centroids": 4, "nprobe": 2}),
+        (ivf2_topk, {"n_coarse": 2, "n_fine": 2, "nprobe_coarse": 1, "nprobe_fine": 1}),
     ):
-        got = op(df, qdf, dim=8, k=3, m=4, query_id_col="qname", **kw)
+        got = op(df, qdf, dim=8, k=3, query_id_col="qname", **kw)
         assert got.columns[0] == "qname"
         assert dict(got.dtypes)["qname"] == "string"
         rows = got.collect()
