@@ -5,18 +5,33 @@
                        (r4: 64-bit keys birthday-collide at design scale),
                        never on raw text.
 * minhash_lsh_dupes  — shingle → minhash signature → banded LSH buckets →
-                       within-bucket candidate pairs → exact Jaccard verify.
-                       Scale shape: the only shuffle is groupBy(band, bucket);
-                       bucket sizes are bounded by construction (hot buckets
-                       = real near-dup clusters, which is the signal itself).
+                       within-bucket candidate pairs → signature-agreement
+                       verify. Hot buckets are capped (id-sorted head kept,
+                       ``bucket_overflow`` flagged).
 * simhash_dupes      — 64-bit simhash over token hashes; Hamming-ball
-                       candidate pairing via 4-segment pigeonhole blocking.
-* ngram_jaccard      — exact n-gram Jaccard for a (small) candidate pair set.
+                       candidate pairing via multi-index pigeonhole blocking.
+* ngram_jaccard      — exact word-n-gram Jaccard over pairs sharing a gram
+                       (df-capped inverted index).
 * embedding_dupes    — cosine near-dup over embedding vectors (see ann.py).
 * connected_components / dedupe_keep_list / dedupe_corpus — cluster
                        closure over the pair graph (alternating
                        large-star/small-star, joins + min aggregates only)
                        → per-doc keep/drop decisions → deduplicated corpus.
+
+The three near-dup searches share ONE candidate-pair core, ``_block_pairs``:
+group rows by a block key → one id-sorted member list per block → stream
+every unordered pair out of it. Each operator is only a block-key
+constructor plus its own cap and exact check:
+
+* minhash: (band, bucket) keys over the signature's band slices;
+* n-gram:  the gram hash itself, after the document-frequency cap;
+* simhash: xxhash64(combo, sh & combo mask) per segment combination.
+
+``_join_sides`` joins a per-doc signature or size back onto both ends of
+the surviving pairs (minhash, n-gram); simhash carries its 8-byte hash in
+the member list instead and needs no join. All three require unique,
+non-NULL ids: NULL-id rows pair with nothing, and an id appearing twice in
+one block raises rather than emitting self-pairs.
 
 MinHash math is vectorized numpy inside pandas_udfs (Arrow batches);
 everything else is built-in column functions.
@@ -26,12 +41,69 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from cog3pio_spark.session import spread_small_scan as _spread_small_scan
+
+
+# -- candidate-pair core ------------------------------------------------------
+def _block_pairs(
+    blocks: DataFrame,
+    key: list[str],
+    id_col: str,
+    payload: tuple[str, ...] = (),
+    aggs: tuple[F.Column, ...] = (),
+) -> DataFrame:
+    """Every unordered pair of rows sharing the ``key`` columns.
+
+    One ``collect_list`` per block builds an id-sorted list of
+    ``(id, *payload)`` structs; pairs then stream out of it with
+    ``posexplode`` and ``explode(slice(…))`` — codegen'd generators, and
+    the largest array ever built is one block's member list, never its
+    C(n, 2) pair array. Returns ``(id_a, id_b, a, b, *aggs)`` with
+    ``id_a < id_b`` and one row per (block, pair): pairs are not deduped
+    across blocks. ``a``/``b`` are the two member structs (``id`` plus the
+    payload columns); ``aggs`` are aggregate columns evaluated once per
+    block.
+
+    NULL ids are dropped (they pair with nothing). An id appearing twice in
+    one block raises: ids must be unique, and a repeated id would otherwise
+    surface as self-pairs or inflated pair counts.
+    """
+    member = F.struct(F.col(id_col).alias("id"), *payload)
+    grouped = (
+        blocks.filter(F.col(id_col).isNotNull())
+        .groupBy(*key)
+        .agg(F.sort_array(F.collect_list(member)).alias("_ms"), *aggs)
+        .filter(F.size("_ms") >= 2)
+    )
+    carried = grouped.columns[len(key) + 1 :]
+    # sorted ⇒ a repeated id would pair with itself; the first generator
+    # reads the list through this check, so every block is checked
+    checked = F.when(
+        F.size(F.array_distinct("_ms.id")) < F.size("_ms"),
+        F.raise_error(f"duplicate {id_col} within one block: near-dup search needs unique ids"),
+    ).otherwise(F.col("_ms"))
+    return (
+        grouped.select(*carried, "_ms", F.posexplode(checked).alias("_i", "_a"))
+        .select(*carried, "_a", F.explode(F.slice("_ms", F.col("_i") + 2, F.size("_ms"))).alias("_b"))
+        .select(
+            F.col("_a.id").alias("id_a"), F.col("_b.id").alias("id_b"),
+            F.col("_a").alias("a"), F.col("_b").alias("b"), *carried,
+        )
+    )
+
+
+def _join_sides(pairs: DataFrame, table: DataFrame, id_col: str, cols: list[str]) -> DataFrame:
+    """Equi-join ``table``'s per-id ``cols`` onto both ends of ``pairs`` as
+    ``<col>_a`` / ``<col>_b`` (inner: a pair whose id is missing drops)."""
+    for s in ("a", "b"):
+        side = table.select(F.col(id_col).alias(f"id_{s}"), *[F.col(c).alias(f"{c}_{s}") for c in cols])
+        pairs = pairs.join(side, f"id_{s}")
+    return pairs
 
 
 # -- exact ------------------------------------------------------------------
@@ -140,9 +212,10 @@ def minhash_lsh_dupes(
        bounded no matter how hot the bucket. Capped buckets are flagged in
        the ``bucket_overflow`` output column (recall on >cap buckets is
        best-effort; the other 15 bands still cover the pairs independently).
-    """
-    from pyspark.sql import Window
 
+    Ids must be unique: a NULL-id doc pairs with nothing, and an id that
+    lands twice in one (band, bucket) raises instead of emitting self-pairs.
+    """
     # r5 review: bands > num_hashes gave rows=0 — every band key became the
     # hash of an EMPTY signature slice, identical for all docs (whole
     # corpus in one capped bucket = silent recall collapse); non-divisible
@@ -222,25 +295,24 @@ def minhash_lsh_dupes(
     # row before hashing — pure serialization overhead; hashing the fixed
     # `rows` longs is the same 64-bit bucket-collision class (collisions
     # only ever MERGE buckets, i.e. add candidates that the threshold then
-    # filters — sf0.1 golden byte-stable across the change).
+    # filters — sf0.1 golden byte-stable across the change). One hash
+    # expression per band is built here in Python, so the key constructor
+    # is codegen'd column math rather than an interpreted transform lambda.
     banded = sig.select(
         id_col,
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(
-                    *[F.element_at("sig", b * rows + j + 1) for j in range(rows)]
-                ),
-            )
-        ).alias("band", "bucket"),
+        F.posexplode(F.array(*[
+            F.xxhash64(*[F.element_at("sig", b * rows + j + 1) for j in range(rows)])
+            for b in range(bands)
+        ])).alias("band", "bucket"),
     )
     # -- 2. capped single-pass candidate generation ------------------------
-    # Group each (band, bucket) and expand pairs inside the member array — a
-    # banded SELF-join would recompute the signature stage for both sides
-    # (no exchange reuse) and shuffle twice; this shape shuffles once. The
-    # row_number/count windows share the groupBy's hash partitioning, so the
-    # cap costs one sort, not an extra exchange (and the cap still binds
-    # BEFORE collect_list — member arrays stay ≤ bucket_cap on any corpus).
+    # Pairs come from the one block → member list → pair core, keyed on
+    # (band, bucket) — a banded SELF-join would recompute the signature
+    # stage for both sides (no exchange reuse) and shuffle twice. The
+    # row_number/count windows share the core's hash partitioning, so the
+    # cap costs one sort, not an extra exchange (and it still binds BEFORE
+    # collect_list — member lists stay ≤ bucket_cap on any corpus; the
+    # id-sorted head of an over-cap bucket is kept).
     wb = Window.partitionBy("band", "bucket").orderBy(id_col)
     wc = Window.partitionBy("band", "bucket")
     capped = (
@@ -248,38 +320,19 @@ def minhash_lsh_dupes(
         .withColumn("_cnt", F.count("*").over(wc))
         .filter(F.col("_rn") <= bucket_cap)
     )
-    members = (
-        capped.groupBy("band", "bucket")
-        .agg(
-            F.collect_list(F.col(id_col)).alias("ms"),
-            F.max(F.col("_cnt") > bucket_cap).alias("overflow"),
-        )
-        .filter(F.size("ms") >= 2)
-    )
-    pair_expr = F.flatten(
-        F.transform(
-            "ms",
-            lambda x, i: F.transform(
-                F.slice("ms", i + 2, F.size("ms")),
-                lambda y: F.struct(
-                    F.least(x, y).alias("id_a"), F.greatest(x, y).alias("id_b")
-                ),
-            ),
-        )
-    )
     pairs = (
-        members.select(F.explode(pair_expr).alias("p"), "overflow")
-        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        _block_pairs(
+            capped, ["band", "bucket"], id_col,
+            aggs=(F.max(F.col("_cnt") > bucket_cap).alias("overflow"),),
+        )
+        .groupBy("id_a", "id_b")
         .agg(F.max("overflow").alias("bucket_overflow"))
     )
-    sig_a = sig.select(F.col(id_col).alias("id_a"), F.col("sig").alias("_sa"))
-    sig_b = sig.select(F.col(id_col).alias("id_b"), F.col("sig").alias("_sb"))
     est = F.size(
-        F.filter(F.zip_with("_sa", "_sb", lambda x, y: x == y), lambda m: m)
+        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)
     ) / F.lit(float(num_hashes))
     near = (
-        pairs.join(sig_a, "id_a")
-        .join(sig_b, "id_b")
+        _join_sides(pairs, sig, id_col, ["sig"])
         .withColumn("jaccard_est", est)
         .filter(F.col("jaccard_est") >= jaccard_threshold)
         .select(
@@ -362,9 +415,9 @@ def simhash_dupes(
     """Pairs with simhash Hamming distance ≤ max_hamming.
 
     Multi-index pigeonhole blocking: the 64-bit hash splits into ``segments``
-    near-equal bit ranges; candidates come from equi-joins on hashed
-    (combo_id, segment values) keys for every (segments − max_hamming)-sized
-    segment combination. Any pair within distance d keeps ≥ s−d segments
+    strided bit sets; candidates are the pairs sharing a block keyed on
+    xxhash64(combo_id, sh & combo mask) for every (segments −
+    max_hamming)-sized segment combination. Any pair within distance d keeps ≥ s−d segments
     intact, so some combo key matches exactly (guaranteed complete when
     combo ≤ segments − max_hamming AND segments ≥ max_hamming + 1; the auto
     plan enforces both — it grows segments past max_hamming before clamping
@@ -373,6 +426,9 @@ def simhash_dupes(
     filter makes the OUTPUT independent of
     the blocking plan — segments only trades candidate volume vs bucket
     saturation (corpus-size-aware default via _simhash_blocking_plan).
+
+    Ids must be unique: a NULL-id doc pairs with nothing, and an id that
+    lands twice in one block raises instead of emitting self-pairs.
     """
     sh = (
         sh_frame
@@ -402,47 +458,34 @@ def simhash_dupes(
     # 32k-doc hot bucket (a 5e8-pair single-task straggler); strided cuts
     # that to 7.6e8 candidates / 17k max bucket. Output is unchanged — the
     # exact bit_count filter below makes it blocking-plan independent.
-    seg_exprs = []
-    for i in range(segments):
-        bits = list(range(i, 64, segments))
-        e = None
-        for k, b in enumerate(bits):
-            term = F.shiftrightunsigned(F.col("sh"), b).bitwiseAND(F.lit(1))
-            term = F.shiftleft(term, k) if k else term
-            e = term if e is None else e.bitwiseOR(term)
-        seg_exprs.append(e)
+    # A combo's key is sh under ONE mask (the OR of its segments' bits, as a
+    # signed long): two signatures agree on the combo's segments exactly
+    # when they agree under the mask, so blocking stays complete.
     from itertools import combinations
 
-    combos = list(combinations(range(segments), combo))
+    masks = [
+        sum(1 << b for i in c for b in range(i, 64, segments))
+        for c in combinations(range(segments), combo)
+    ]
     blk_exprs = [
-        F.xxhash64(F.lit(ci), *[seg_exprs[i] for i in c])
-        for ci, c in enumerate(combos)
+        F.xxhash64(F.lit(ci), F.col("sh").bitwiseAND(F.lit(m - (1 << 64) if m >> 63 else m).cast("long")))
+        for ci, m in enumerate(masks)
     ]
     blk = sh.select(id_col, "sh", F.explode(F.array(*blk_exprs)).alias("blk"))
-    # hamming is computed and filtered IN the join projection, BEFORE the
+    # hamming is computed and filtered on the core's pair rows, BEFORE the
     # pair dedup (r6, guide §2.3 "shuffle fewer bytes"): the old shape
     # shuffled EVERY candidate pair (with both 8-byte signatures) through
     # dropDuplicates and filtered after — 1.36e9 rows ≈ 44 GB of shuffle at
     # the sf1.0 bench, 102 s. Duplicate (id_a, id_b) rows carry identical
     # signatures, hence identical hamming, so filter-then-dedup ≡
     # dedup-then-filter; only true pairs (≤ combos × |output|) reach the
-    # exchange.
-    cand = (
-        blk.alias("l")
-        .join(
-            blk.alias("r"),
-            (F.col("l.blk") == F.col("r.blk"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.bit_count(F.col("l.sh").bitwiseXOR(F.col("r.sh"))).alias("hamming"),
-        )
+    # exchange. sh rides in the member structs, so no join is needed.
+    return (
+        _block_pairs(blk, ["blk"], id_col, payload=("sh",))
+        .select("id_a", "id_b", F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh"))).alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
     )
-    return cand.select("id_a", "id_b", "hamming")
 
 
 def _popcount64(x: np.ndarray) -> np.ndarray:
@@ -602,15 +645,19 @@ def ngram_jaccard_pairs(
       fits (gate/bench scale) and shuffle-joins a corpus-scale sizes
       table, which one row per document becomes at 10⁷+ docs;
     * the inverted index is ONE exchange on gram: window count (the df cap,
-      still applied BEFORE any member array materializes — arrays stay
-      ≤ df_cap at any corpus scale) → collect_list sharing the window's
-      hash partitioning → in-array positional pair expansion (the
-      minhash_lsh_dupes members idiom). The old shape paid an aggregate
-      exchange for df, a join exchange to apply it, and a self-join for
-      pairs — three gram-keyed exchanges collapsed into one.
+      still applied BEFORE any member list materializes — lists stay
+      ≤ df_cap at any corpus scale) → the shared ``_block_pairs`` core
+      keyed on gram, whose collect_list shares the window's hash
+      partitioning. The old shape paid an aggregate exchange for df, a join
+      exchange to apply it, and a self-join for pairs — three gram-keyed
+      exchanges collapsed into one.
 
-    Measured at the 10× measurement corpus (tools/probe_q16.py, 32 cores):
-    9.4 s → see OPTIMIZATION_r06.md; sf0.01 oracle hash unchanged.
+    Measured at the 10× measurement corpus (32 cores): 9.4 s → see
+    OPTIMIZATION_r06.md; sf0.01 oracle hash unchanged.
+
+    Ids must be unique: a NULL-id doc pairs with nothing, and an id that
+    shares a gram with itself (two rows, one id) raises instead of
+    emitting self-pairs or double-counted intersections.
     """
     words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     # gram key = xxhash64 over the n word hashes rather than over the
@@ -644,8 +691,6 @@ def ngram_jaccard_pairs(
     garr = garr.localCheckpoint(eager=False)
     sizes = garr.select(F.col(id_col), F.size("_garr").alias("n_grams"))
     grams = garr.select(F.col(id_col), F.explode("_garr").alias("gram"))
-    from pyspark.sql import Window
-
     # Hot-key note (r6 review): the window count buffers a hot stop-gram's
     # rows in ONE task's (spillable) window buffer before the filter drops
     # them. That is the same single-task hot-key concentration the r1–r5
@@ -655,57 +700,26 @@ def ngram_jaccard_pairs(
     # tiny hot list before the exchange) measured 5.78 s vs 4.88 s at the
     # 10× corpus (identical 2600-row output), so the window shape is kept.
     wdf = Window.partitionBy("gram")
-    members = (
-        grams.withColumn("_df", F.count("*").over(wdf))
-        .filter(F.col("_df") <= df_cap)
-        .groupBy("gram")
-        .agg(F.collect_list(F.col(id_col)).alias("ms"))
-        .filter(F.size("ms") >= 2)
-    )
-    # per-doc grams are distinct, so ids within a gram group are distinct:
-    # positional i<j expansion visits each unordered pair once and
-    # least/greatest restores the id_a < id_b orientation of the old
-    # self-join's l.id < r.id filter
-    pair_expr = F.flatten(
-        F.transform(
-            "ms",
-            lambda x, i: F.transform(
-                F.slice("ms", i + 2, F.size("ms")),
-                lambda y: F.struct(
-                    F.least(x, y).alias("id_a"), F.greatest(x, y).alias("id_b")
-                ),
-            ),
-        )
-    )
+    capped = grams.withColumn("_df", F.count("*").over(wdf)).filter(F.col("_df") <= df_cap)
+    # per-doc grams are distinct, so a pair shares a gram block once per
+    # shared gram: the per-pair row count IS |A∩B| over the uncapped grams
     co = (
-        members.select(F.explode(pair_expr).alias("p"))
-        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
+        _block_pairs(capped, ["gram"], id_col)
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("inter"))
     )
-    out = (
-        # NO forced broadcast hint on sizes: it has one row per document, so
-        # a hard F.broadcast() would collect a corpus-scale table to the
-        # driver at 10⁷+ docs. AQE's runtime size check converts these
-        # joins to broadcast exactly when sizes actually fits (it does at
-        # gate/bench scale) and leaves them as shuffles when it does not —
-        # the scale-adaptive behavior the hint would have destroyed.
-        co.join(
-            sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed(
-                "n_grams", "na"
-            ),
-            "id_a",
-        )
-        .join(
-            sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed(
-                "n_grams", "nb"
-            ),
-            "id_b",
-        )
-        .withColumn("jaccard", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")))
+    # NO forced broadcast hint on sizes: it has one row per document, so a
+    # hard F.broadcast() would collect a corpus-scale table to the driver
+    # at 10⁷+ docs. AQE's runtime size check converts these joins to
+    # broadcast exactly when sizes actually fits (it does at gate/bench
+    # scale) and leaves them as shuffles when it does not — the
+    # scale-adaptive behavior the hint would have destroyed.
+    return (
+        _join_sides(co, sizes, id_col, ["n_grams"])
+        .withColumn("jaccard", F.col("inter") / (F.col("n_grams_a") + F.col("n_grams_b") - F.col("inter")))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
-    return out
 
 
 # -- dedup cluster closure: connected components ------------------------------

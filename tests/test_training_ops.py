@@ -319,6 +319,88 @@ def test_simhash_blocking_plan_invariant(dup_docs):
             for r in simhash_dupes(dup_docs, max_hamming=3, segments=s).collect()
         }
         assert got == base, f"segments={s} diverged"
+    # sh rides in the block member lists: no join anywhere in the plan
+    out = simhash_dupes(dup_docs, max_hamming=3)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan.split("== Initial Plan ==")[0], plan
+
+
+def test_block_pairs_matches_combinations_reference(spark):
+    """The shared candidate-pair core emits exactly the itertools
+    combinations of every block's id-sorted members: one row per (block,
+    pair) — a pair sharing two blocks appears twice — oriented id_a < id_b,
+    with the member structs and the per-block aggregate carried along."""
+    from collections import Counter
+    from itertools import combinations
+
+    from cog3pio_spark.operators.dedupe import _block_pairs
+
+    rows = [
+        ("k1", "solo", 1, (1, "x")),  # block of size 1: no pairs
+        ("k2", "m", 2, (2, "y")),
+        ("k2", "c", 3, (3, "z")),  # size 2, ids arrive unsorted
+        ("k5", "e", 4, (4, "x")),
+        ("k5", "m", 5, (5, "y")),
+        ("k5", "a", 6, (6, "z")),
+        ("k5", "c", 7, (7, "x")),
+        ("k5", "b", 8, (8, "y")),  # size 5; (c, m) also shares k2
+    ]
+    blocks = spark.createDataFrame(
+        rows, "blk string, doc_id string, w int, s struct<n:int,t:string>"
+    )
+    out = _block_pairs(
+        blocks, ["blk"], "doc_id", payload=("w", "s"), aggs=(F.sum("w").alias("w_sum"),)
+    )
+    assert out.columns == ["id_a", "id_b", "a", "b", "w_sum"]
+    got = Counter(
+        (r["id_a"], r["id_b"], r["a"]["id"], r["a"]["w"], tuple(r["a"]["s"]),
+         r["b"]["id"], r["b"]["w"], tuple(r["b"]["s"]), r["w_sum"])
+        for r in out.collect()
+    )
+    want = Counter()
+    for blk in ("k1", "k2", "k5"):
+        ms = sorted(r[1:] for r in rows if r[0] == blk)
+        w_sum = sum(m[1] for m in ms)
+        for a, b in combinations(ms, 2):
+            want[(a[0], b[0], *a, *b, w_sum)] += 1
+    assert got == want
+    assert got[("c", "m", "c", 3, (3, "z"), "m", 2, (2, "y"), 5)] == 1
+    assert got[("c", "m", "c", 7, (7, "x"), "m", 5, (5, "y"), 30)] == 1
+    assert sum(got.values()) == 1 + 10
+
+
+_DUP_ID_DOCS = [
+    (1, "alpha beta gamma delta epsilon zeta"),
+    (1, "alpha beta gamma delta epsilon eta"),
+    (2, "alpha beta gamma delta epsilon zeta"),
+]
+_NEAR_DUP_OPS = {
+    "ngram": lambda d: ngram_jaccard_pairs(d, n=3, threshold=0.1),
+    "minhash": lambda d: minhash_lsh_dupes(d, jaccard_threshold=0.3),
+    # the two id-1 signatures differ in 6 bits, so at Hamming 6 (q24's
+    # threshold) they share a block; at the default 3 no block holds both
+    "simhash": lambda d: simhash_dupes(d, max_hamming=6),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_NEAR_DUP_OPS))
+def test_near_dup_ops_reject_duplicate_ids_and_skip_null_ids(spark, op):
+    """Ids must be unique: a repeated id within one block raises (before,
+    it surfaced as (1, 1) self-pairs or a doubled intersection count such
+    as jaccard 7.0). A NULL-id exact copy of a paired doc pairs with
+    nothing, as it did before member lists became structs."""
+    from pyspark.errors import SparkRuntimeException
+
+    run = _NEAR_DUP_OPS[op]
+    docs = spark.createDataFrame(_DUP_ID_DOCS, "doc_id long, text string")
+    with pytest.raises(SparkRuntimeException, match="duplicate doc_id within one block"):
+        run(docs).collect()
+    with_null = spark.createDataFrame(
+        [_DUP_ID_DOCS[0], (None, _DUP_ID_DOCS[0][1]), _DUP_ID_DOCS[2]],
+        "doc_id long, text string",
+    )
+    assert {(r["id_a"], r["id_b"]) for r in run(with_null).collect()} == {(1, 2)}
 
 
 def test_ngram_df_cap_drops_stop_gram_only_pairs(spark):
